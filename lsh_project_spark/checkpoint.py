@@ -119,81 +119,18 @@ def checkpointed_dedup(
     spark: SparkSession, images: DataFrame, root: str, cfg=None
 ) -> DataFrame:
     """The flagship pipeline with per-stage checkpoints: kill it after any
-    stage and rerun — completed stages are skipped, output is identical."""
+    stage and rerun — completed stages are skipped, output is identical.
+    Same stage chain as ``pipeline.dedup_pipeline``; the candidates
+    manifest also records the hot-bucket drop totals (``hot_*``)."""
     from .config import PipelineConfig
-    from .operators.candidates import candidate_pairs
-    from .operators.cluster import assign_clusters
-    from .operators.profile import (
-        multimodal_profile,
-        profile_signatures,
-        verify_pairs_from_profile,
-    )
+    from .pipeline import _dedup_chain, _hashes_ids
 
     cfg = cfg or PipelineConfig()
-    # "+longkey" salts every stage key: stage keys are name+config+parents
-    # (not content), so without the salt a resume could mix checkpoints of
-    # the pre-round-6 string-keyed composition with the hashed-id stages
-    # below — the map-back join would then see string ids where it expects
-    # int64 hashes.  Old roots are simply rebuilt, never misread.
-    cp = CheckpointedPipeline(spark, root, cfg.config_hash() + "+longkey")
-
-    slim = images.select("image_id", "caption", "phash")
-    # same 8-byte hot path as dedup_pipeline (see pipeline.py): hashed ids
-    # through every checkpointed stage, string ids rejoin in the
-    # assignments stage via map_back_assignments
-    idmap = slim.select(F.xxhash64("image_id").alias("hid"), "image_id")
-    slim = slim.select(
-        F.xxhash64("image_id").alias("image_id"), "caption", "phash"
-    )
-    profile = cp.stage("profile", [], lambda: multimodal_profile(slim, cfg))
-    dstats: dict = {}
-    cands = cp.stage(
-        "candidates",
-        ["profile"],
-        lambda: candidate_pairs(
-            profile_signatures(profile, cfg).select(
-                "image_id",
-                F.xxhash64("modality", "band", "bucket").alias("bucket"),
-            ),
-            bucket_cols=("bucket",),
-            hot_bucket_threshold=cfg.hot_bucket_threshold,
-            drop_stats=dstats,
-        ),
-        # the skew defense's exact recall-loss budget rides in the manifest
-        # (hot_pairs_dropped = C(n,2) - (n-1) summed over hot buckets), so
-        # a production run records what its star defense dropped
-        extra_metrics=lambda: {
-            f"hot_{k}": int(v)
-            for k, v in dstats["df"].collect()[0].asDict().items()
-        } if "df" in dstats else {},
-    )
-    pairs = cp.stage(
-        "verified_pairs",
-        ["profile", "candidates"],
-        lambda: verify_pairs_from_profile(cands, profile, cfg),
-    )
-    asg_parents = ["profile", "verified_pairs"]
-    if cfg.substring_enabled:
-        from .operators.substring import substring_pairs
-
-        sub = cp.stage(
-            "substring_pairs",
-            [],
-            lambda: substring_pairs(
-                slim.select("image_id", F.col("caption").alias("text")),
-                cfg.substring,
-                id_col="image_id",
-                text_col="text",
-            ).select("a", "b"),
-        )
-        pairs = pairs.unionByName(sub).dropDuplicates(["a", "b"])
-        asg_parents.append("substring_pairs")
-    from .pipeline import map_back_assignments
-
-    return cp.stage(
-        "assignments",
-        asg_parents,
-        lambda: map_back_assignments(
-            assign_clusters(profile, pairs, id_col="image_id"), idmap
-        ),
-    )
+    # The salt names the chain version and whether ids ride it hashed.
+    # Stage keys hash name + config + parents, not content: a root written
+    # for string ids holds xxhash64 ids, and a long-id rerun must not
+    # resume from it and skip the map-back.  Roots of another version or
+    # id mode are rebuilt, never misread.
+    salt = "+v2:hashed" if _hashes_ids(images) else "+v2:raw"
+    cp = CheckpointedPipeline(spark, root, cfg.config_hash() + salt)
+    return _dedup_chain(images, cfg, cp.stage).assignments

@@ -48,7 +48,6 @@ def candidate_pairs(
     hot_bucket_threshold: int = 2000,
     salt_groups: int = 16,
     drop_stats: dict | None = None,
-    persist: bool = True,  # kept for API compat; single-pass plan needs none
     min_shared_buckets: int = 1,
 ) -> DataFrame:
     """Signature table -> distinct (a, b) candidate pairs with a < b.

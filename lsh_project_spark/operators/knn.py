@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 
 from ..config import CrossPolytopeConfig
 from ..oracle.lsh_core import concat_hashes, cp_hash
-from ..params import fold_rotations
+from ..params import fold_rotations_2d
 from .signatures import cp_multiprobe_signature_table, cp_signature_table
 
 
@@ -99,9 +99,8 @@ def cp_nearest_neighbor_broadcast(
         )
     ids = np.array([r[id_col] for r in rows])
     X = np.vstack([r[vec_col] for r in rows]).astype(np.float32)
-    rot = fold_rotations(cfg)
-    L, k, d, _ = rot.shape
-    rot2d = np.ascontiguousarray(rot.transpose(3, 0, 1, 2).reshape(d, L * k * d))
+    rot2d = fold_rotations_2d(cfg)
+    L, k, d = cfg.num_tables, cfg.k, cfg.dim
     buckets = concat_hashes(cp_hash((X @ rot2d).reshape(len(ids), L, k, d)), d)
     # per-table open hash: bucket -> contiguous [start, end) into a sorted
     # member array (numpy-friendly; no python dict of arrays)

@@ -14,8 +14,9 @@ all rotation/hash work while operands stay cache-resident,
 
 Output: (image_id, phash, hs, cp_buckets, mh_bands, simhash) — a narrow,
 shuffle-free stage.  All hashes share the portable polynomial hash62 family
-(functions/hashing.py) and agree bit-exactly with the JVM expression path
-(operators/signatures.py) and the DuckDB oracle — pinned by tests.
+(functions/hashing.py) and agree bit-exactly with the standalone
+per-modality tables (operators/signatures.py) and the DuckDB oracle —
+pinned by tests.
 
 Why not the JVM higher-order-function path for the pipeline: Spark HOF
 lambdas evaluate interpreted (outside whole-stage codegen); at num_perm x
@@ -33,9 +34,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..config import PipelineConfig
-from ..functions.hashing import PORTABLE_HASH_MOD, minhash_params, portable_hash62_np
+from ..functions.hashing import minhash_params
 from ..oracle.lsh_core import concat_hashes, cp_hash
-from ..params import fold_rotations
+from ..params import fold_rotations_2d
 from ..sources.codecs import phash_to_vector
 from .signatures import SIMHASH_SALT, simhash_band_expr
 
@@ -48,12 +49,6 @@ def profile_schema(id_type: str = "string") -> str:
         f"image_id {id_type}, phash long, hs array<int>, cp_buckets array<long>, "
         "mh_bands array<long>, simhash long, simhash2 long"
     )
-
-
-def _shingle_set(text: str, k: int) -> list[str]:
-    from ..functions.textsig import shingle_set
-
-    return shingle_set(text, k)
 
 
 def _caption_block(
@@ -104,13 +99,11 @@ def _caption_block(
 
 def multimodal_profile(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """images(image_id, caption, phash) -> profile DF (see profile_schema)."""
-    P = PORTABLE_HASH_MOD
     mh_cfg = cfg.minhash
     a, b, c = minhash_params(mh_cfg.num_perm, mh_cfg.seed)
     rpb, n_bands = mh_cfg.rows_per_band, mh_cfg.num_bands
-    rot = fold_rotations(cfg.cp)
-    L, k, d, _ = rot.shape
-    rot2d = np.ascontiguousarray(rot.transpose(3, 0, 1, 2).reshape(d, L * k * d))
+    rot2d = fold_rotations_2d(cfg.cp)
+    L, k, d = cfg.cp.num_tables, cfg.cp.k, cfg.cp.dim
     shingle_k = mh_cfg.shingle_size
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

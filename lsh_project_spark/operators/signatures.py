@@ -7,11 +7,13 @@ batch — the Spark-native form of the reference's "bulked" kernels
 every table's every hash at once, then a vectorized argmax + bit-concat.
 The folded rotation tensor is broadcast via closure capture (~1 MiB).
 
-MinHash and SimHash (no reference analog; SURVEY.md §2.9) are JVM column
-expressions — split/transform/explode/groupBy — around ONE Arrow-vectorized
-hash projection (the portable polynomial hash62 family,
-functions/hashing.py), so the array folds stay inside whole-stage codegen
-and everything matches the DuckDB oracle bit-for-bit.
+MinHash and SimHash (no reference analog; SURVEY.md §2.9) each run as ONE
+Arrow-vectorized map stage over the shared numpy kernels in
+functions/textsig.py (the portable polynomial hash62 family,
+functions/hashing.py) — the same kernels the fused profile stage runs, so
+both paths, and the DuckDB oracle, agree bit-for-bit.  Only the SimHash
+band slicing (``simhash_band_expr``) and the shingle array expression
+``shingle_expr`` (used by the SQL-checked queries) are JVM expressions.
 """
 
 from __future__ import annotations
@@ -26,9 +28,7 @@ from pyspark.sql import DataFrame
 from ..config import CrossPolytopeConfig, MinHashConfig, SimHashConfig
 from ..functions.hashing import minhash_params
 from ..oracle.lsh_core import concat_hashes, cp_hash
-from ..params import fold_rotations
-
-CP_SIG_SCHEMA = "image_id string, table_idx int, bucket long"
+from ..params import fold_rotations, fold_rotations_2d, rotations_2d
 
 
 def cp_signature_table(
@@ -40,10 +40,10 @@ def cp_signature_table(
     (/root/reference/src/lsh.c:44,70-77): insertion = materialization,
     probe = equi-join on (table_idx, bucket).
     """
-    rot = fold_rotations(cfg)  # [L,k,d,d], float32, tiny -> closure capture
-    L, k, d, _ = rot.shape
-    # one [d, L*k*d] operand so each Arrow batch is a single BLAS call
-    rot2d = np.ascontiguousarray(rot.transpose(3, 0, 1, 2).reshape(d, L * k * d))
+    # one [d, L*k*d] operand (float32, tiny -> closure capture) so each
+    # Arrow batch is a single BLAS call
+    rot2d = fold_rotations_2d(cfg)
+    L, k, d = cfg.num_tables, cfg.k, cfg.dim
 
     def sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -88,7 +88,7 @@ def cp_multiprobe_signature_table(
     if rot is None:
         rot = fold_rotations(cfg)
     L, k, d, _ = rot.shape
-    rot2d = np.ascontiguousarray(rot.transpose(3, 0, 1, 2).reshape(d, L * k * d))
+    rot2d = rotations_2d(rot)
     cldim = (d - 1).bit_length() + 1  # bits per sub-hash (concat_hashes)
 
     def sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -142,7 +142,7 @@ def cp_multiprobe_signature_table(
     )
 
 
-# --------------------------------------------------------------- MinHash (JVM)
+# -------------------------------------------------------------------- MinHash
 
 
 def shingle_expr(text_col: str, k: int):
@@ -231,7 +231,7 @@ def minhash_band_table(
     )
 
 
-# --------------------------------------------------------------- SimHash (JVM)
+# -------------------------------------------------------------------- SimHash
 
 SIMHASH_BITS = 56  # bits 0..55 of hash62 >> 4: every bit op stays in signed int64
 
@@ -245,8 +245,8 @@ def simhash_table(
     """(id, text) -> (id, simhash, simhash2): two independent 56-bit SimHash
     fingerprints over distinct word 3-shingles (the second uses a salted
     hash family — together they band into 4 x 28-bit slices, see
-    SimHashConfig).  The per-shingle hash62 is ONE Arrow-vectorized
-    projection; votes + fingerprint fold stay JVM higher-order expressions.
+    SimHashConfig).  Shingle hashing, the bit votes and the fingerprint
+    fold all run in numpy inside one Arrow map stage.
 
     bit b = 1 iff sum over shingles of (2*bit_b(hash56(shingle)) - 1) > 0,
     with hash56 = hash62 >> 4 (only bits 0..55 are read).  Shingle features

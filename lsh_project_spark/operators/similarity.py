@@ -143,27 +143,6 @@ ANN_SEED = 240817
 ANN_MAX_BITS = 16
 
 
-def _plane_array_literal(plane: str) -> str:
-    """'+/-' plane string rendered as a Spark ``array<double>`` literal of
-    ±1.0 — constant-folded by Catalyst into a single Literal, so the per-row
-    cost is one zip_with over doubles instead of O(dim) per-character
-    substring + CASE parses (the round-5 embedding_near_dup hot spot)."""
-    return "array(" + ",".join(
-        "1.0D" if c == "+" else "-1.0D" for c in plane
-    ) + ")"
-
-
-def _portable_dot(vec_col: str, plane: str) -> str:
-    """Spark SQL: sequential-fold dot of ``vec_col`` with a '+/-' plane —
-    products are exactly ±x_i (multiply by a ±1.0 double is exact in IEEE
-    754), summed left-to-right in double, mirroring the DuckDB oracle's
-    list-comprehension order bit for bit."""
-    return (
-        f"aggregate(zip_with({vec_col}, {_plane_array_literal(plane)}, "
-        f"(x, h) -> cast(x as double) * h), cast(0 as double), (a, v) -> a + v)"
-    )
-
-
 # row-block for the [rows, tables*bits, dim] float64 product/accumulate
 # temporaries below (512 x 128 x 64 x 8 B = 33 MB, cache/memory friendly)
 _SIGN_BLOCK = 512

@@ -153,6 +153,34 @@ def lcs_len_via_diagonal_runs(
     return int(g - 1 + run_len.max())
 
 
+def _lcs_accepts(
+    a: pd.Series, b: pd.Series, text_a: pd.Series, text_b: pd.Series, g: int
+) -> pd.DataFrame:
+    """The exact substring verify kernel every verify path runs: aligned
+    (a, b, text_a, text_b) columns -> the (a, b, lcs_len) rows whose
+    longest common substring is >= g.  Each id's g-gram hash array is
+    computed once per call, however many pairs it is in (one id, one
+    text)."""
+    grams: dict = {}
+
+    def g_of(i, t):
+        h = grams.get(i)
+        if h is None:
+            h = grams[i] = _kgram_hashes(t, g)
+        return h
+
+    lens = np.fromiter(
+        (
+            lcs_len_via_diagonal_runs(ta, tb, g, g_of(x, ta), g_of(y, tb))
+            for x, y, ta, tb in zip(a, b, text_a, text_b)
+        ),
+        dtype=np.int64,
+        count=len(a),
+    )
+    out = pd.DataFrame({"a": a, "b": b, "lcs_len": lens})
+    return out[out["lcs_len"] >= g]
+
+
 def _kgram_hash_buffer(
     texts: list[str], k: int
 ) -> tuple[np.ndarray | None, np.ndarray, np.ndarray | None]:
@@ -306,28 +334,33 @@ def verify_lcs_pairs(
     """(a, b) candidates + (id, text) -> surviving (a, b) with an exact
     common substring >= min_len.  Direct per-pair text join — the right
     shape for SMALL pair sets (streaming micro-batches); the batch path
-    uses the grid cogroup in substring_pairs instead."""
-    side = texts.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    joined = cands.join(
-        side.withColumnRenamed("_id", "a").withColumnRenamed("_t", "ta"), "a"
-    ).join(side.withColumnRenamed("_id", "b").withColumnRenamed("_t", "tb"), "b")
-    a_type = dict(cands.dtypes)["a"]
+    uses the grid cogroup in substring_pairs for large ones."""
+    return _join_verify(cands, texts, min_len, id_col, text_col).select("a", "b")
 
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _join_verify(
+    cands: DataFrame, docs: DataFrame, min_len: int, id_col: str, text_col: str
+) -> DataFrame:
+    """(a, b) candidates -> accepted (a, b, lcs_len), both texts joined
+    onto every pair and verified in one map stage."""
+    side = docs.select(F.col(id_col).alias("_did"), F.col(text_col).alias("_t"))
+    joined = cands.join(
+        side.select(F.col("_did").alias("a"), F.col("_t").alias("_ta")), "a"
+    ).join(
+        side.select(F.col("_did").alias("b"), F.col("_t").alias("_tb")), "b"
+    )
+    a_type = dict(docs.dtypes)[id_col]
+
+    def verify_direct(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = [
-                lcs_len_via_diagonal_runs(ta, tb, min_len)
-                for ta, tb in zip(pdf["ta"], pdf["tb"])
-            ]
-            out = pdf[["a", "b"]].copy()
-            out["lcs_len"] = np.array(lens, dtype=np.int64)
-            yield out[out["lcs_len"] >= min_len]
+            if len(pdf):
+                yield _lcs_accepts(
+                    pdf["a"], pdf["b"], pdf["_ta"], pdf["_tb"], min_len
+                )
 
     return joined.mapInPandas(
-        verify, schema=f"a {a_type}, b {a_type}, lcs_len long"
-    ).select("a", "b")
+        verify_direct, schema=f"a {a_type}, b {a_type}, lcs_len long"
+    )
 
 
 def substring_pairs(
@@ -446,45 +479,9 @@ def substring_pairs(
     # identical — the grid remains the path for pair volumes a real corpus
     # produces.
     if scan_cands.count() <= _DIRECT_VERIFY_MAX_PAIRS:
-        side = docs.select(F.col(id_col).alias("_did"), F.col(text_col).alias("_t"))
-        joined = scan_cands.join(
-            side.select(F.col("_did").alias("a"), F.col("_t").alias("_ta")), "a"
-        ).join(
-            side.select(F.col("_did").alias("b"), F.col("_t").alias("_tb")), "b"
+        return equal_pairs.unionByName(
+            _join_verify(scan_cands, docs, min_len, id_col, text_col)
         )
-
-        def verify_direct(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                grams: dict = {}
-
-                def g_of(i, t):
-                    h = grams.get(i)
-                    if h is None:
-                        h = grams[i] = _kgram_hashes(t, min_len)
-                    return h
-
-                lens = np.fromiter(
-                    (
-                        lcs_len_via_diagonal_runs(
-                            ta, tb, min_len, g_of(a, ta), g_of(b, tb)
-                        )
-                        for a, b, ta, tb in zip(
-                            pdf["a"], pdf["b"], pdf["_ta"], pdf["_tb"]
-                        )
-                    ),
-                    dtype=np.int64,
-                    count=len(pdf),
-                )
-                out = pdf[["a", "b"]].copy()
-                out["lcs_len"] = lens
-                yield out[out["lcs_len"] >= min_len]
-
-        scanned = joined.mapInPandas(
-            verify_direct, schema=f"a {a_type}, b {a_type}, lcs_len long"
-        )
-        return equal_pairs.unionByName(scanned)
     # BIG sets: hand the cached candidate set to a reliable checkpoint (the
     # write job reads cached partitions, so nothing recomputes) and free
     # the cache; the grid cogroup then runs over plan-truncated inputs.
@@ -522,30 +519,9 @@ def substring_pairs(
     ).select(F.col("cell").alias("dcell"), id_col, "_t")
 
     def verify(pairs_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pairs_pdf):
-            return pd.DataFrame({"a": [], "b": [], "lcs_len": []})
         texts = dict(zip(docs_pdf[id_col], docs_pdf["_t"]))
-        grams: dict = {}
-
-        def g_of(i):
-            h = grams.get(i)
-            if h is None:
-                h = grams[i] = _kgram_hashes(texts[i], min_len)
-            return h
-
-        lens = np.fromiter(
-            (
-                lcs_len_via_diagonal_runs(
-                    texts[a], texts[b], min_len, g_of(a), g_of(b)
-                )
-                for a, b in zip(pairs_pdf["a"], pairs_pdf["b"])
-            ),
-            dtype=np.int64,
-            count=len(pairs_pdf),
-        )
-        out = pairs_pdf[["a", "b"]].copy()
-        out["lcs_len"] = lens
-        return out[out["lcs_len"] >= min_len]
+        a, b = pairs_pdf["a"], pairs_pdf["b"]
+        return _lcs_accepts(a, b, a.map(texts), b.map(texts), min_len)
 
     scanned = (
         cells.groupby("cell")

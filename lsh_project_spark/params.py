@@ -81,14 +81,20 @@ def fold_rotations(cfg: CrossPolytopeConfig) -> np.ndarray:
     return out.astype(np.float32)
 
 
-def fold_rotations_2d(cfg: CrossPolytopeConfig) -> np.ndarray:
-    """RotMat reshaped for one-matmul-per-batch application: [d, L*k*d] so
-    that ``batch[B,d] @ R2d -> [B, L*k*d] -> reshape [B,L,k,d]``.
+def rotations_2d(rot: np.ndarray) -> np.ndarray:
+    """A rotation tensor [L, k, d, d] laid out for one-matmul-per-batch
+    application: [d, L*k*d] so that
+    ``batch[B,d] @ R2d -> [B, L*k*d] -> reshape [B,L,k,d]``.
 
     This is the Spark-native analog of the reference's bulked kernels
     (src/lsh.c:466-536, bulk=512): one BLAS call per Arrow record batch
     computes every table's every hash at once.
     """
-    rot = fold_rotations(cfg)  # [L,k,d,d]: Y[b,l,k,i] = sum_j rot[l,k,i,j] * X[b,j]
-    L, k, d, _ = rot.shape
+    L, k, d, _ = rot.shape  # Y[b,l,k,i] = sum_j rot[l,k,i,j] * X[b,j]
     return np.ascontiguousarray(rot.transpose(3, 0, 1, 2).reshape(d, L * k * d))
+
+
+def fold_rotations_2d(cfg: CrossPolytopeConfig) -> np.ndarray:
+    """``fold_rotations(cfg)`` in the [d, L*k*d] matmul layout; the
+    reshape of a product takes (L, k, d) = (num_tables, k, dim)."""
+    return rotations_2d(fold_rotations(cfg))

@@ -1,16 +1,24 @@
 """End-to-end near-duplicate detection & clustering pipeline.
 
-images(image_id, bytes, w, h, fmt, caption, phash)
-  -> featurize (phash -> unit ±1/8 vectors; the reference's data model)
-  -> CP-LSH signature table           (reference semantics, batched matmul)
-  -> MinHash band table over captions (Broder '97, JVM-only)
-  -> SimHash band table over captions (Charikar '02, JVM-only)
-  -> candidate pairs per modality (bucket self-join, hot-bucket star defense)
-  -> exact verify per modality (phash Hamming / shingle Jaccard)
+images(image_id, caption, phash)
+  -> slim projection; string ids hashed to xxhash64 longs
+  -> profile: ONE Arrow map stage (operators/profile.py) computing, per
+     record batch, CP-LSH buckets over phash vectors (reference semantics,
+     batched matmul), MinHash bands (Broder '97) and two SimHash
+     fingerprints (Charikar '02) over captions, and the shingle-hash set
+  -> candidate pairs: one bucket self-join over the unified signature
+     table of all three modalities (hot-bucket star defense)
+  -> exact verify (phash Hamming <= tau OR shingle Jaccard >= tau)
   -> substring modality (winnow -> fp equi-join -> exact LCS verify)
-  -> OR-union of verified pairs across ALL modalities
+  -> OR-union of the verified pairs of ALL modalities
   -> large-star/small-star connected components
-  -> (image_id, cluster_id)
+  -> map-back to string ids: (image_id, cluster_id)
+
+``_dedup_chain`` writes this chain once; ``dedup_pipeline``,
+``checkpoint.checkpointed_dedup`` and ``bench.run_dedup`` differ only in
+how each stage is materialized.  ``all_signatures`` builds the same
+signature table from the standalone per-modality operators
+(operators/signatures.py) — the parity reference for the profile path.
 
 Column discipline: `bytes` is projected away before the first shuffle and
 never reappears (SURVEY.md §4 "keep image bytes out of every shuffle").
@@ -22,6 +30,7 @@ from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 from .config import PipelineConfig
 from .operators.candidates import candidate_pairs
@@ -30,11 +39,9 @@ from .operators.featurize import features_from_phash
 from .operators.signatures import (
     cp_signature_table,
     minhash_band_table,
-    shingle_expr,
     simhash_band_table,
     simhash_table,
 )
-from .operators.verify import verify_jaccard, verify_phash_hamming
 
 
 @dataclass
@@ -80,37 +87,6 @@ def all_signatures(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return cp.unionByName(mh).unionByName(sh)
 
 
-def verify_pairs_multimodal(
-    cands: DataFrame, images: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """One combined exact-verify pass: a candidate pair is a duplicate if
-    phash Hamming <= tau  OR  caption shingle-Jaccard >= tau.  Joins the
-    (id, phash, shingles) projection twice — `bytes` never shuffles."""
-    side = images.select(
-        F.col("image_id").alias("_id"),
-        F.col("phash").alias("_ph"),
-        shingle_expr("caption", cfg.minhash.shingle_size).alias("_sh"),
-    )
-    a_side = side.select(
-        F.col("_id").alias("a"), F.col("_ph").alias("pa"), F.col("_sh").alias("sa")
-    )
-    b_side = side.select(
-        F.col("_id").alias("b"), F.col("_ph").alias("pb"), F.col("_sh").alias("sb")
-    )
-    return (
-        cands.join(a_side, "a")
-        .join(b_side, "b")
-        .filter(
-            F.expr(
-                f"bit_count(pa ^ pb) <= {cfg.phash_hamming_threshold} OR "
-                f"(size(array_intersect(sa, sb)) / size(array_union(sa, sb)))"
-                f" >= {cfg.jaccard_threshold}"
-            )
-        )
-        .select("a", "b")
-    )
-
-
 def map_back_assignments(assignments_h: DataFrame, idmap: DataFrame) -> DataFrame:
     """(hashed image_id, hashed cluster_id) -> (image_id, cluster_id) with
     every cluster relabeled to its min member STRING id — exactly the label
@@ -127,77 +103,89 @@ def map_back_assignments(assignments_h: DataFrame, idmap: DataFrame) -> DataFram
     return named.join(labels, "_ch").select("image_id", "cluster_id")
 
 
-def dedup_pipeline(images: DataFrame, cfg: PipelineConfig | None = None) -> PipelineResult:
-    """Production path: ONE fused Arrow-vectorized signature stage
-    (operators/profile.py — the reference's bulked model), a single unified
-    bucket self-join, a compact int-array verify, then CC clustering."""
+def _hashes_ids(images: DataFrame) -> bool:
+    """String ids ride the chain as xxhash64 longs and are mapped back at
+    the end; ids that are already longs ride it as they are."""
+    return dict(images.dtypes)["image_id"] == "string"
+
+
+def _dedup_chain(images: DataFrame, cfg: PipelineConfig, stage) -> PipelineResult:
+    """The batch stage chain, composed once for every runner.
+
+    ``stage(name, parents, build, extra_metrics=None)`` returns the
+    materialized DataFrame of one named stage: ``build()`` makes its plan,
+    ``parents`` names the stages it reads, and ``extra_metrics`` (candidates
+    only) is a zero-arg callable returning the hot-bucket drop totals.  The
+    runners differ only in that callback: in memory (``dedup_pipeline``),
+    Parquet checkpoints (``checkpoint.checkpointed_dedup``) or persist +
+    count barriers with timers (``bench.run_dedup``).
+
+    Stages: profile -> candidates -> verified_pairs -> substring_pairs
+    (when enabled) -> edges -> assignments -> map_back (string ids only).
+    """
     from .operators.profile import (
         multimodal_profile,
         profile_signatures,
         verify_pairs_from_profile,
     )
-    from pyspark.storagelevel import StorageLevel
 
-    cfg = cfg or PipelineConfig()
     slim = images.select("image_id", "caption", "phash")
     # the Arrow profile stage parallelizes over INPUT partitions; a compact
     # parquet (few row groups) would starve the Python workers.  Only
     # repartition when the scan is narrower than the cluster — at real
     # scale inputs have plenty of splits and this is a no-op.
-    spark = images.sparkSession
-    target = spark.sparkContext.defaultParallelism
+    target = images.sparkSession.sparkContext.defaultParallelism
     if slim.rdd.getNumPartitions() < target:
         slim = slim.repartition(target)
-    # Narrow the hot path to 8-byte keys: every shuffle between here and
-    # the final map-back (two collect_list aggregation levels, pair dedup,
-    # the verify self-joins, and every CC round) moves xxhash64(image_id)
-    # longs instead of variable-length id strings — the byte attribution
-    # (scripts/probe_bytes.py) showed those ObjectHashAggregate/Generate
-    # stages own most of the pipeline's shuffle volume, and the quad-probe
-    # hardware bracket pins the scaling shortfall on shared-DRAM bytes.
-    # Components are invariant under the key swap (hot-bucket star edges
-    # keep each bucket connected regardless of which member is the hub;
-    # cold pairs / verify / substring accepts are id-independent), and the
+    # Narrow the hot path to 8-byte keys: every shuffle up to the map-back
+    # (both collect_list levels, pair dedup, the verify self-joins, every
+    # CC round) moves xxhash64(image_id) longs instead of id strings — the
+    # byte attribution (scripts/probe_bytes.py) put most of the shuffle
+    # volume there.  Components are invariant under the key swap, and the
     # map-back relabels every cluster to its min STRING id, so the output
-    # is bit-identical to the string-keyed plan.  Collision risk is the
-    # same negligible class as the 62-bit fingerprints the candidate stage
-    # already relies on (~n^2/2^65); a 100 TB deployment would mint dense
-    # int64 ids at ingest instead of hashing.  Inputs whose ids are ALREADY
-    # 8-byte longs (e.g. the oracle-portable fixture) skip the hash AND the
-    # whole map-back tail — connected components already label every
-    # cluster with its min member id, which for raw longs IS the final
+    # is bit-identical to the string-keyed plan; collisions are the same
+    # negligible class (~n^2/2^65) as the candidate stage's fingerprints.
+    # Ids that are ALREADY longs skip the hash AND the map-back: CC labels
+    # each cluster with its min member id, which for them IS the final
     # label (same rule as substring_pairs / near_dup_pairs).
-    hash_ids = dict(slim.dtypes)["image_id"] == "string"
+    hash_ids = _hashes_ids(slim)
     if hash_ids:
         idmap = slim.select(F.xxhash64("image_id").alias("hid"), "image_id")
         slim = slim.select(
             F.xxhash64("image_id").alias("image_id"), "caption", "phash"
         )
-    profile = multimodal_profile(slim, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    # materialize the cache BEFORE the plan fans out: the profile feeds the
-    # signature union, both verify sides, and the cluster node list, and
-    # AQE submits those independent first-wave stages CONCURRENTLY — on a
-    # cold cache each of them recomputes the whole Arrow profile stage
-    # (measured: 11 simultaneous ~4.5 s jobs at bench scale, all burning
-    # cores on identical work).  One count pins the cache; every
-    # downstream stage then reads it.
-    profile.count()
+    profile = stage("profile", [], lambda: multimodal_profile(slim, cfg))
     # pack (modality, band, bucket) into one 64-bit key: the salted
     # aggregation, its bucket-total window, and the cold regroup all key on
     # it, so one long instead of three columns narrows every one of those
     # shuffles.  A cross-bucket hash collision (~rows^2/2^65) can only MERGE
     # two buckets, adding false candidates the exact verify removes.
-    sigs = profile_signatures(profile, cfg).select(
-        "image_id", F.xxhash64("modality", "band", "bucket").alias("bucket")
-    )
     dstats: dict = {}
-    cands = candidate_pairs(
-        sigs,
-        bucket_cols=("bucket",),
-        hot_bucket_threshold=cfg.hot_bucket_threshold,
-        drop_stats=dstats,
+    cands = stage(
+        "candidates",
+        ["profile"],
+        lambda: candidate_pairs(
+            profile_signatures(profile, cfg).select(
+                "image_id",
+                F.xxhash64("modality", "band", "bucket").alias("bucket"),
+            ),
+            bucket_cols=("bucket",),
+            hot_bucket_threshold=cfg.hot_bucket_threshold,
+            drop_stats=dstats,
+        ),
+        # the skew defense's exact recall-loss budget (hot_pairs_dropped =
+        # C(n,2) - (n-1) summed over hot buckets)
+        extra_metrics=lambda: {
+            f"hot_{k}": int(v)
+            for k, v in dstats["df"].collect()[0].asDict().items()
+        },
     )
-    pairs = verify_pairs_from_profile(cands, profile, cfg)
+    verified = stage(
+        "verified_pairs",
+        ["profile", "candidates"],
+        lambda: verify_pairs_from_profile(cands, profile, cfg),
+    )
+    edge_parents = ["verified_pairs"]
     if cfg.substring_enabled:
         # OR-union the substring modality (winnow -> fp join -> exact LCS
         # verify) into the edge set before clustering: the engine's output
@@ -206,92 +194,80 @@ def dedup_pipeline(images: DataFrame, cfg: PipelineConfig | None = None) -> Pipe
         # when its phash Hamming and shingle Jaccard both miss
         from .operators.substring import substring_pairs
 
-        sub = substring_pairs(
-            slim.select("image_id", F.col("caption").alias("text")),
-            cfg.substring,
-            id_col="image_id",
-            text_col="text",
-        ).select("a", "b")
-        pairs = pairs.unionByName(sub).dropDuplicates(["a", "b"])
-    # verified pairs feed clustering 2-3 times (fast-path count + collect,
-    # or the distributed loop's seed checkpoint) — persist so the verify
-    # join chain runs once
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    assignments_h = assign_clusters(profile, pairs, id_col="image_id")
-    if not hash_ids:
-        # raw long ids: CC's labels (min member per component) and the
-        # pair list already carry the original ids — no map-back tail
-        return PipelineResult(
-            assignments=assignments_h,
-            verified_pairs=pairs.select(
-                F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-            ),
-            drop_stats=dstats.get("df"),
+        sub = stage(
+            "substring_pairs",
+            [],
+            lambda: substring_pairs(
+                slim.select("image_id", F.col("caption").alias("text")),
+                cfg.substring,
+                id_col="image_id",
+                text_col="text",
+            ).select("a", "b"),
         )
-    assignments = map_back_assignments(assignments_h, idmap)
-    map_a = idmap.select(
-        F.col("hid").alias("_ha"), F.col("image_id").alias("_ia")
+        edge_parents.append("substring_pairs")
+    edges = stage(
+        "edges",
+        edge_parents,
+        lambda: verified.unionByName(sub).dropDuplicates(["a", "b"])
+        if cfg.substring_enabled
+        else verified,
     )
-    map_b = idmap.select(
-        F.col("hid").alias("_hb"), F.col("image_id").alias("_ib")
+    assignments_h = stage(
+        "assignments",
+        ["profile", "edges"],
+        lambda: assign_clusters(profile, edges, id_col="image_id"),
     )
-    pairs_str = (
-        pairs.join(map_a, pairs["a"] == F.col("_ha"))
-        .join(map_b, pairs["b"] == F.col("_hb"))
+    if not hash_ids:
+        # raw long ids: CC's labels and the pair list already carry them
+        pairs = edges.select(
+            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
+        )
+        return PipelineResult(assignments_h, pairs, dstats.get("df"))
+    assignments = stage(
+        "map_back",
+        ["assignments"],
+        lambda: map_back_assignments(assignments_h, idmap),
+    )
+
+    def named(side):
+        return idmap.select(
+            F.col("hid").alias(f"_h{side}"), F.col("image_id").alias(f"_i{side}")
+        )
+
+    pairs = (
+        edges.join(named("a"), edges["a"] == F.col("_ha"))
+        .join(named("b"), edges["b"] == F.col("_hb"))
         .select(
             F.least("_ia", "_ib").alias("a"),
             F.greatest("_ia", "_ib").alias("b"),
         )
     )
-    return PipelineResult(
-        assignments=assignments,
-        verified_pairs=pairs_str,
-        drop_stats=dstats.get("df"),
-    )
+    return PipelineResult(assignments, pairs, dstats.get("df"))
 
 
-# -------- per-modality variants (kept for stage attribution / diagnostics)
+def _in_memory_stage(name, parents, build, extra_metrics=None) -> DataFrame:
+    """``dedup_pipeline``'s materialization policy: two caches, no writes."""
+    df = build()
+    if name == "profile":
+        # fill the cache BEFORE the plan fans out: the profile feeds the
+        # signature union, both verify sides and the CC node list, and AQE
+        # runs those first-wave stages CONCURRENTLY — on a cold cache each
+        # recomputes the Arrow profile (measured: 11 simultaneous ~4.5 s
+        # jobs at bench scale).  One count pins it for all of them.
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        df.count()
+    elif name == "edges":
+        # clustering reads the edges 2-3 times (fast-path count + collect,
+        # or the distributed loop's seed checkpoint): run the verify once
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    return df
 
 
-def verified_image_pairs(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """CP-LSH over phash vectors -> candidates -> exact Hamming verify."""
-    feats = features_from_phash(images)
-    sigs = cp_signature_table(feats, cfg.cp)
-    cands = candidate_pairs(
-        sigs, hot_bucket_threshold=cfg.hot_bucket_threshold
-    )
-    return verify_phash_hamming(cands, images, cfg.phash_hamming_threshold)
-
-
-def verified_caption_pairs(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """MinHash + SimHash band LSH over captions -> exact Jaccard verify."""
-    docs = images.select("image_id", F.col("caption").alias("text"))
-    mh = minhash_band_table(docs, cfg.minhash, id_col="image_id")
-    mh_cands = candidate_pairs(
-        mh,
-        id_col="image_id",
-        bucket_cols=("band_idx", "band_hash"),
-        hot_bucket_threshold=cfg.hot_bucket_threshold,
-    )
-    sh = simhash_band_table(
-        simhash_table(docs, cfg.simhash, id_col="image_id"),
-        cfg.simhash,
-        id_col="image_id",
-    )
-    sh_cands = candidate_pairs(
-        sh,
-        id_col="image_id",
-        bucket_cols=("band_idx", "band_hash"),
-        hot_bucket_threshold=cfg.hot_bucket_threshold,
-    )
-    cands = mh_cands.unionByName(sh_cands).dropDuplicates(["a", "b"])
-    return verify_jaccard(
-        cands,
-        docs,
-        cfg.minhash.shingle_size,
-        cfg.jaccard_threshold,
-        id_col="image_id",
-    ).select("a", "b")
+def dedup_pipeline(images: DataFrame, cfg: PipelineConfig | None = None) -> PipelineResult:
+    """Production path: ONE fused Arrow-vectorized signature stage
+    (operators/profile.py — the reference's bulked model), a single unified
+    bucket self-join, a compact int-array verify, then CC clustering."""
+    return _dedup_chain(images, cfg or PipelineConfig(), _in_memory_stage)
 
 
 def pair_recall(found_pairs: DataFrame, true_pairs: DataFrame) -> float:

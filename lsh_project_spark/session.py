@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """About 60% of the host's MemTotal, capped at 48g: a local-mode
+    driver heap larger than the host grows until the OOM killer ends it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal"))
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{min(48 * 1024, kb * 6 // 10240)}m"
+
+
 def get_spark(
     app: str = "lsh_project_spark",
     cores: int | None = None,
@@ -63,7 +74,10 @@ def get_spark(
         # signature matmul batches: large enough to amortize Arrow transfer,
         # small enough that batch x d floats stay cache/memory friendly
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         # generous broadcast ceiling: the verify stage joins a compact pair
         # list (tens of MB at bench scale) against the array-heavy profile —
         # broadcasting the pairs spares the profile TWO full shuffles.  AQE

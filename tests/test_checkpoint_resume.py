@@ -95,6 +95,53 @@ def test_checkpointed_dedup_resume_identical(spark, tmp_path):
     assert rows1 == rows3
 
 
+def test_checkpointed_dedup_long_ids_match_pipeline(spark, tmp_path):
+    """Long ids ride the chain unhashed: the checkpointed run equals
+    dedup_pipeline on the same input, a rerun rebuilds no stage, and a
+    root first written for the string ids of the same rows is rebuilt, not
+    resumed (its stages hold hashed ids)."""
+    import pyspark.sql.functions as F
+
+    from lsh_project_spark.pipeline import dedup_pipeline
+
+    strings = images_table(spark, num_clusters=20, seed=11).select(
+        "image_id", "caption", "phash"
+    )
+    images = strings.select(
+        F.regexp_replace("image_id", "[^0-9]", "").cast("long").alias("image_id"),
+        "caption",
+        "phash",
+    ).cache()
+    ids = {r["image_id"] for r in images.collect()}
+    assert len(ids) == images.count()
+    root = str(tmp_path / "pipeline_ckpt")
+    cfg = PipelineConfig()
+
+    checkpointed_dedup(spark, strings, root, cfg).count()
+    out1 = checkpointed_dedup(spark, images, root, cfg)
+    rows1 = sorted((r["image_id"], r["cluster_id"]) for r in out1.collect())
+    assert {a for a, _ in rows1} == ids
+
+    def manifests():
+        return {
+            stage: json.load(open(os.path.join(root, stage, MANIFEST)))
+            for stage in os.listdir(root)
+            if os.path.exists(os.path.join(root, stage, MANIFEST))
+        }
+
+    stamps1 = {s: m["written_at"] for s, m in manifests().items()}
+    assert {"profile", "candidates", "verified_pairs", "assignments"} <= set(stamps1)
+
+    out2 = checkpointed_dedup(spark, images, root, cfg)
+    rows2 = sorted((r["image_id"], r["cluster_id"]) for r in out2.collect())
+    assert rows2 == rows1
+    for stage, m in manifests().items():
+        assert m["written_at"] == stamps1[stage], f"{stage} was rebuilt"
+
+    direct = dedup_pipeline(images, cfg).assignments
+    assert sorted((r["image_id"], r["cluster_id"]) for r in direct.collect()) == rows1
+
+
 def test_candidates_manifest_records_hot_drop_budget(spark, tmp_path):
     """A planted hot bucket's exact drop accounting (C(n,2) - (n-1) pairs
     per hot bucket) must ride in the candidates stage manifest, matching

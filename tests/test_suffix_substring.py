@@ -104,6 +104,36 @@ def test_substring_pairs_spark(spark):
     assert got[(0, 1)] >= len(shared)
 
 
+def test_substring_grid_verify_matches_direct(spark, monkeypatch):
+    """The grid cogroup verify (taken above _DIRECT_VERIFY_MAX_PAIRS scan
+    pairs) accepts exactly the direct path's (a, b, lcs_len) set."""
+    from lsh_project_spark.operators import substring
+
+    cfg = SubstringConfig(min_length=50, kgram=20)
+    shared = "the quick brown fox jumps over the lazy dog and then runs far away home"
+    docs = [
+        (0, "prefix one " + shared + " suffix alpha"),
+        (1, "totally different beginning " + shared),
+        (2, "no overlap here at all just some random words repeated random words"),
+        (3, "another completely unrelated document about spark and parquet files"),
+        (4, "prefix one " + shared + " suffix alpha"),
+        (5, shared[:40] + " and an ending that is not shared by anyone else"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    def accepted():
+        return {
+            (r["a"], r["b"], r["lcs_len"])
+            for r in substring_pairs(df, cfg).collect()
+        }
+
+    direct = accepted()
+    monkeypatch.setattr(substring, "_DIRECT_VERIFY_MAX_PAIRS", 0)
+    grid = accepted()
+    assert grid == direct
+    assert {(a, b) for a, b, _ in direct} == {(0, 1), (0, 4), (1, 4)}
+
+
 def test_winnowed_fingerprints_deterministic(spark):
     cfg = SubstringConfig()
     docs = [(0, "abcdefghijklmnopqrstuvwxyz " * 5)]
