@@ -79,7 +79,11 @@ class CheckpointedPipeline:
         ``extra_metrics``: optional zero-arg callable returning a dict of
         stage-specific metrics recorded in the manifest (evaluated only
         when the stage actually builds — e.g. the candidate stage's
-        hot-bucket drop accounting)."""
+        hot-bucket drop accounting).
+
+        Safe to call from two threads for different stages (the dedup
+        chain builds substring_pairs on a background thread): a call
+        touches only its own stage's key, manifest and directory."""
         parent_keys = [self.keys[p] for p in parents]
         key = stage_key(stage, self.config_hash, parent_keys)
         self.keys[stage] = key
@@ -133,4 +137,7 @@ def checkpointed_dedup(
     # id mode are rebuilt, never misread.
     salt = "+v2:hashed" if _hashes_ids(images) else "+v2:raw"
     cp = CheckpointedPipeline(spark, root, cfg.config_hash() + salt)
-    return _dedup_chain(images, cfg, cp.stage).assignments
+    res = _dedup_chain(images, cfg, cp.stage, [])
+    # every stage is on disk now: free substring's candidate cache
+    res.close()
+    return res.assignments

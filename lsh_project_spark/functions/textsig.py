@@ -22,6 +22,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from .hashing import (
     POLY_B,
@@ -37,6 +38,17 @@ from .hashing import (
 H32 = 1 << 32
 SIMHASH_BITS = 56
 _SPACE = 32  # codepoint of the shingle separator
+
+
+def _factorize_strings(strs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(codes, uniques) in first-seen order, comparing exact UTF-8 bytes.
+    pd.factorize's string hash table stops at an embedded NUL, so 'a' and
+    'a\\x00b' would share one code; Arrow strings carry their length."""
+    enc = pa.array(strs, pa.string()).dictionary_encode()
+    return (
+        enc.indices.to_numpy().astype(np.int64),
+        enc.dictionary.to_numpy(zero_copy_only=False),
+    )
 
 
 def shingle_set(text: str, k: int) -> list[str]:
@@ -103,9 +115,7 @@ def shingle_hash_block(texts: list[str], k: int) -> ShingleBlock:
         flat = np.array(
             [tok for i in long_ord for tok in tok_lists[i]], dtype=object
         )
-        tcodes, tuniq = pd.factorize(flat)
-        tcodes = np.asarray(tcodes, dtype=np.int64)
-        tuniq = np.asarray(tuniq, dtype=object)
+        tcodes, tuniq = _factorize_strings(flat)
         _, tl1, tl2 = portable_hash62_np(tuniq, return_lanes=True)
         tlens = np.fromiter(
             (len(s) for s in tuniq), dtype=np.int64, count=len(tuniq)
@@ -172,9 +182,7 @@ def shingle_hash_block(texts: list[str], k: int) -> ShingleBlock:
         stexts = np.array(
             [texts[i] for i in np.nonzero(short)[0]], dtype=object
         )
-        sinv, suniq = pd.factorize(stexts)
-        sinv = np.asarray(sinv, dtype=np.int64)
-        suniq = np.asarray(suniq, dtype=object)
+        sinv, suniq = _factorize_strings(stexts)
         _, sl1, sl2 = portable_hash62_np(suniq, return_lanes=True)
         sulen = np.fromiter(
             (len(s) for s in suniq), dtype=np.int64, count=len(suniq)

@@ -11,20 +11,25 @@ drop (/root/reference/src/lsh.c:179-189); ours is explicit:
   ``salt_groups`` reducers and no single task ever materializes it whole,
 - bucket totals roll up over the (already tiny) per-salt groups with a
   window — no second pass over the raw rows, no count join-back,
-- cold buckets (n <= hot_bucket_threshold) emit ALL pairs via a codegen'd
-  array expression (exact semantics),
-- hot buckets emit *chained star* pairs: member -> salt-group min ->
-  bucket min.  Connectivity through the chain keeps every member in one
-  component (what the downstream connected-components consumes), while
-  bounding output linearly in bucket size.  Mixed hot buckets can only
-  lose candidate pairs (recall backstopped by the L independent tables),
-  never gain false positives (exact verify follows),
+- a regroup on the window's own partitioning (no exchange) gathers each
+  cold bucket (n <= hot_bucket_threshold) whole and keeps each hot bucket
+  split by salt; ONE generator then emits, per group, either ALL pairs of
+  the cold bucket via a codegen'd array expression (exact semantics) or
+  the hot group's *chained star*: member -> salt-group min -> bucket min.
+  Connectivity through the chain keeps every member in one component
+  (what the downstream connected-components consumes), while bounding
+  output linearly in bucket size.  Mixed hot buckets can only lose
+  candidate pairs (recall backstopped by the L independent tables), never
+  gain false positives (exact verify follows),
 - dropped-pair counts per hot bucket (C(n,2) minus emitted) are REPORTED:
   pass ``drop_stats`` to receive a 1-row DataFrame with the totals; the
   bench emits it in its JSON.
 
 Pair dedup across tables/bands happens BEFORE the expensive exact verify,
-so each pair is verified once, not once per colliding table.
+so each pair is verified once, not once per colliding table.  The whole
+operator is one pass with three exchanges (salted aggregate, bucket
+window, pair dedup), no union over a shared subtree, and no Spark job
+while its plan is built.
 
 At 100 TB the salted groupBy is the dominant shuffle: it moves each
 signature row once, keyed as co-located as the problem allows, and the
@@ -80,59 +85,45 @@ def candidate_pairs(
     w = Window.partitionBy(*bc)
     sized = grouped.select(
         *bc,
+        "_s",
         "ms",
         F.sum(F.size("ms")).over(w).alias("n"),
         F.min(F.expr("array_min(ms)")).over(w).alias("mn"),
     )
-    # ONE materialization for the 3-4 consumers below (cold regroup, hot
-    # star, hot chain, drop-stats): AQE fails to reuse the salted-agg and
-    # window exchanges across the union branches — measured at the 66k
-    # bench, the full aggregation map stage (95 MB read, 44 MB shuffle)
-    # and the window exchange each executed THREE times concurrently
-    # (non-AQE planning reuses them; stage IO confirms).  Cutting the
-    # shared subtree with an eager executor-local checkpoint runs each
-    # exchange once; blocks are freed by the ContextCleaner when the plan
-    # is GC'd.  Trade-off vs a reliable checkpoint: executor loss between
-    # materialization and consumption fails the enclosing job (fail-stop
-    # recompute, never wrong results) — acceptable for a one-shot
-    # intermediate inside a single logical query, and the write round-trip
-    # a reliable checkpoint would add costs more than it insures here.
-    sized = sized.localCheckpoint(eager=True)
-
-    # cold: gather the <= T members per bucket, emit all pairs via codegen
-    cold = (
-        sized.filter(F.col("n") <= T)
-        .groupBy(*bc)
-        .agg(F.flatten(F.collect_list("ms")).alias("allm"))
+    # regroup: a cold bucket gathers whole, a hot bucket stays split by
+    # salt.  The key extends the window's (bucket) partitioning, so the
+    # aggregate reuses it and plans no exchange.
+    hot = F.col("n") > T
+    group = F.when(hot, F.col("_s")).otherwise(-1).alias("_g")
+    groups = (
+        sized.groupBy(*bc, "n", "mn", group)
+        .agg(F.flatten(F.collect_list("ms")).alias("ms"))
+        .select("n", "mn", "ms", F.expr("array_min(ms)").alias("sm"))
     )
-    pair_expr = (
-        "flatten(transform(sequence(1, size(allm) - 1), i -> "
+    # one generator per group: a cold group emits all its pairs; a hot
+    # group emits the chained star, member -> group min (sm) -> bucket min
+    # (mn), which keeps the bucket one connected component with O(n) edges.
+    # Self-edges (a member and its own sm, the chain edge of mn's group)
+    # fall to the a != b filter.
+    all_pairs = (
+        "flatten(transform(sequence(1, size(ms) - 1), i -> "
         "transform(sequence(0, i - 1), j -> "
-        "struct(least(element_at(allm, i + 1), element_at(allm, j + 1)) as a, "
-        "greatest(element_at(allm, i + 1), element_at(allm, j + 1)) as b))))"
+        "struct(least(element_at(ms, i + 1), element_at(ms, j + 1)) as a, "
+        "greatest(element_at(ms, i + 1), element_at(ms, j + 1)) as b))))"
     )
-    cold_pairs = (
-        cold.filter(F.size("allm") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.a", "p.b")
+    star = (
+        "concat(transform(ms, m -> struct(least(sm, m) as a, greatest(sm, m) as b)), "
+        "array(struct(least(sm, mn) as a, greatest(sm, mn) as b)))"
     )
-
-    # hot: chained star — member -> salt-group min -> bucket min keeps the
-    # bucket one connected component with O(n) edges
-    hot = sized.filter(F.col("n") > T).select(
-        "ms", F.expr("array_min(ms)").alias("sm"), "mn"
-    )
-    hot_member_edges = (
-        hot.select(F.col("sm"), F.explode("ms").alias("member"))
-        .filter(F.col("member") != F.col("sm"))
+    edges = (
+        groups.filter(hot | (F.size("ms") >= 2))
         .select(
-            F.least("sm", "member").alias("a"), F.greatest("sm", "member").alias("b")
+            hot.alias("hot"),
+            F.explode(F.expr(f"CASE WHEN n > {T} THEN {star} ELSE {all_pairs} END"))
+            .alias("p"),
         )
-    )
-    hot_chain_edges = (
-        hot.filter(F.col("sm") != F.col("mn"))
-        .select(F.least("sm", "mn").alias("a"), F.greatest("sm", "mn").alias("b"))
-        .dropDuplicates(["a", "b"])
+        .select("hot", "p.a", "p.b")
+        .filter(F.col("a") != F.col("b"))
     )
 
     if drop_stats is not None:
@@ -140,10 +131,9 @@ def candidate_pairs(
         # n - g (each group: size_g - 1) and the chain edges are g - 1, so
         # exactly n - 1 edges are emitted and C(n,2) - (n-1) are dropped
         # (exact accounting of the skew defense, replacing the reference's
-        # silent overflow drop)
-        hb = sized.filter(F.col("n") > T).groupBy(*bc).agg(
-            F.first("n").alias("n"),
-        )
+        # silent overflow drop).  Lazy: collecting it reruns the salted
+        # aggregate and window as a job of its own.
+        hb = sized.filter(hot).groupBy(*bc).agg(F.first("n").alias("n"))
         drop_stats["df"] = hb.agg(
             F.count("*").alias("hot_buckets"),
             F.coalesce(
@@ -153,15 +143,15 @@ def candidate_pairs(
         )
 
     if min_shared_buckets > 1:
-        cold_pairs = (
-            cold_pairs.groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("_nb"))
-            .filter(F.col("_nb") >= min_shared_buckets)
+        # a hot edge always passes; a cold pair needs min_shared_buckets
+        # enumerations across buckets
+        return (
+            edges.groupBy("a", "b")
+            .agg(
+                F.max("hot").alias("_hot"),
+                F.count_if(~F.col("hot")).alias("_nb"),
+            )
+            .filter(F.col("_hot") | (F.col("_nb") >= min_shared_buckets))
             .select("a", "b")
         )
-    return (
-        cold_pairs.unionByName(hot_member_edges)
-        .unionByName(hot_chain_edges)
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    return edges.select("a", "b").dropDuplicates(["a", "b"])

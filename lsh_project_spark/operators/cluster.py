@@ -207,27 +207,6 @@ def connected_components(
     _contract_local) followed by the distributed large-star/small-star
     loop on the contracted graph.  Pass driver_max_edges=0 to force the
     distributed path."""
-    # constraint propagation off while planning the iteration: edge lists
-    # built from multi-branch unions over a shared subtree (candidate_pairs)
-    # crash UnionBase.rewriteConstraints ("key not found: <attr>") when the
-    # checkpoint plan is optimized; see session.py for the session-wide
-    # default — this guard covers sessions not built by our factory
-    spark = edges.sparkSession
-    conf_key = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(conf_key, "true")
-    spark.conf.set(conf_key, "false")
-    try:
-        return _connected_components_impl(
-            edges, max_iter, driver_max_edges, contract
-        )
-    finally:
-        spark.conf.set(conf_key, prev)
-
-
-def _connected_components_impl(
-    edges: DataFrame, max_iter: int, driver_max_edges: int,
-    contract: bool = True,
-) -> DataFrame:
     # Lineage cut per round (Catalyst cannot express iteration):
     # - with a checkpoint dir set (sc.setCheckpointDir), use RELIABLE
     #   checkpoints — survive executor loss, the right mode on a real

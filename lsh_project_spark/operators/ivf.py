@@ -99,14 +99,14 @@ def ivf_fit_centroids(
 
 def _ivf_scores_np(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     """[n, n_lists] rank scores |c|^2 - 2 v.c with the EXACT doubles of the
-    SQL fold (_score_expr): per (row, centroid) the dot is a strict
-    left-to-right accumulation (np.add.accumulate == the sequential SQL
-    fold; products of a float-cast-to-double by a double literal round
-    identically), and c2 uses the same numpy sum that produced the SQL
-    literals — so scores, argmin choices, and tie decisions are
-    bit-identical to the expression rendering (and the DuckDB oracle)."""
+    DuckDB oracle (duckdb_ivf_topk_sql): per (row, centroid) the dot is a
+    strict left-to-right accumulation (np.add.accumulate == the sequential
+    list_dot_product fold; products of a float-cast-to-double by a double
+    literal round identically), and c2 uses the same numpy row sums that
+    function renders as literals — so scores, argmin choices, and tie
+    decisions are bit-identical to the oracle."""
     cents = np.asarray(cents, dtype=np.float64)
-    c2 = (cents * cents).sum(axis=1)  # the very values ivf_centroid_literals emits
+    c2 = (cents * cents).sum(axis=1)  # duckdb_ivf_topk_sql's c2 literals
     prods = x[:, None, :] * cents[None, :, :]  # [n, L, d]
     dots = np.add.accumulate(prods, axis=2)[:, :, -1]
     return c2[None, :] - 2.0 * dots

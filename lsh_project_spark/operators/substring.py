@@ -366,10 +366,15 @@ def _join_verify(
 def substring_pairs(
     docs: DataFrame, cfg: SubstringConfig, id_col: str = "doc_id",
     text_col: str = "text", hot_threshold: int = 64, grid: int = 8,
-    min_shared_fps: int = 1,
+    min_shared_fps: int = 1, caches: list | None = None,
 ) -> DataFrame:
     """(id, text) -> (a, b, lcs_len) pairs with an exact common substring of
     >= cfg.min_length chars.
+
+    Building the result runs one Spark job, the scan-pair count that picks
+    the verify path (plus an eager checkpoint on the grid path).  The
+    candidate set stays cached until the caller's action is done: pass a
+    list as ``caches`` to receive it and unpersist it afterwards.
 
     ``min_shared_fps`` (default 1 = exact semantics) is the scale lever for
     near-threshold-heavy corpora: require candidates to share >= m winnowed
@@ -407,7 +412,7 @@ def substring_pairs(
         )
         out = substring_pairs(
             hashed, cfg, id_col, text_col, hot_threshold, grid,
-            min_shared_fps,
+            min_shared_fps, caches,
         )
         ma = idmap.select(F.col("_h").alias("a"), F.col(id_col).alias("_sa"))
         mb = idmap.select(F.col("_h").alias("b"), F.col(id_col).alias("_sb"))
@@ -455,13 +460,15 @@ def substring_pairs(
     # the (a, b, hash, len) rows are compact, far smaller than the
     # signature table that produced them.  The direct path leaves this
     # small cache (bounded by the fast-path threshold, a few MB) live until
-    # the caller's action completes; the grid path hands the set to a
-    # reliable checkpoint and unpersists.
+    # the caller's action completes and hands it to ``caches``; the grid
+    # path hands the set to a reliable checkpoint and unpersists.
     from pyspark.storagelevel import StorageLevel
 
     spark = docs.sparkSession
     reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
     cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
+    if caches is not None:
+        caches.append(cands)
     min_len = cfg.min_length
     a_type = dict(docs.dtypes)[id_col]
     eq = (F.col("_tha") == F.col("_thb")) & (F.col("_tla") == F.col("_tlb"))

@@ -16,7 +16,9 @@ images(image_id, caption, phash)
 
 ``_dedup_chain`` writes this chain once; ``dedup_pipeline``,
 ``checkpoint.checkpointed_dedup`` and ``bench.run_dedup`` differ only in
-how each stage is materialized.  ``all_signatures`` builds the same
+how each stage is materialized.  The substring modality reads only the
+slim input, so the chain builds it on a background thread while the
+image/caption branch runs.  ``all_signatures`` builds the same
 signature table from the standalone per-modality operators
 (operators/signatures.py) — the parity reference for the profile path.
 
@@ -26,9 +28,12 @@ never reappears (SURVEY.md §4 "keep image bytes out of every shuffle").
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
+from functools import partial
 
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -44,6 +49,12 @@ from .operators.signatures import (
 )
 
 
+def _unpersist(caches: list[DataFrame]) -> None:
+    for df in caches:
+        df.unpersist()
+    caches.clear()
+
+
 @dataclass
 class PipelineResult:
     assignments: DataFrame  # (image_id, cluster_id)
@@ -51,6 +62,18 @@ class PipelineResult:
     # 1-row lazy DataFrame (hot_buckets, pairs_dropped, max_bucket): the
     # skew defense's exact recall-loss accounting (operators/candidates.py)
     drop_stats: DataFrame | None = None
+    # what the run persisted; close() (or leaving a ``with`` block)
+    # unpersists it once the caller's last action is done
+    caches: list[DataFrame] = field(default_factory=list)
+
+    def close(self) -> None:
+        _unpersist(self.caches)
+
+    def __enter__(self) -> PipelineResult:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 def all_signatures(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -109,7 +132,9 @@ def _hashes_ids(images: DataFrame) -> bool:
     return dict(images.dtypes)["image_id"] == "string"
 
 
-def _dedup_chain(images: DataFrame, cfg: PipelineConfig, stage) -> PipelineResult:
+def _dedup_chain(
+    images: DataFrame, cfg: PipelineConfig, stage, caches: list[DataFrame]
+) -> PipelineResult:
     """The batch stage chain, composed once for every runner.
 
     ``stage(name, parents, build, extra_metrics=None)`` returns the
@@ -118,10 +143,15 @@ def _dedup_chain(images: DataFrame, cfg: PipelineConfig, stage) -> PipelineResul
     only) is a zero-arg callable returning the hot-bucket drop totals.  The
     runners differ only in that callback: in memory (``dedup_pipeline``),
     Parquet checkpoints (``checkpoint.checkpointed_dedup``) or persist +
-    count barriers with timers (``bench.run_dedup``).
+    count barriers with timers (``bench.run_dedup``).  ``caches`` collects
+    what the chain's operators persist; the result's ``close()`` frees it.
 
-    Stages: profile -> candidates -> verified_pairs -> substring_pairs
-    (when enabled) -> edges -> assignments -> map_back (string ids only).
+    Stages: profile -> candidates -> verified_pairs -> edges -> assignments
+    -> map_back (string ids only).  When enabled, substring_pairs runs on
+    one background thread from before profile until just before edges, so
+    ``stage`` is called from two threads.  The thread inherits the caller's
+    job group and tags; an error on either side propagates once both sides
+    have stopped, and no thread outlives the call.
     """
     from .operators.profile import (
         multimodal_profile,
@@ -134,7 +164,8 @@ def _dedup_chain(images: DataFrame, cfg: PipelineConfig, stage) -> PipelineResul
     # parquet (few row groups) would starve the Python workers.  Only
     # repartition when the scan is narrower than the cluster — at real
     # scale inputs have plenty of splits and this is a no-op.
-    target = images.sparkSession.sparkContext.defaultParallelism
+    spark = images.sparkSession
+    target = spark.sparkContext.defaultParallelism
     if slim.rdd.getNumPartitions() < target:
         slim = slim.repartition(target)
     # Narrow the hot path to 8-byte keys: every shuffle up to the map-back
@@ -154,62 +185,70 @@ def _dedup_chain(images: DataFrame, cfg: PipelineConfig, stage) -> PipelineResul
         slim = slim.select(
             F.xxhash64("image_id").alias("image_id"), "caption", "phash"
         )
-    profile = stage("profile", [], lambda: multimodal_profile(slim, cfg))
-    # pack (modality, band, bucket) into one 64-bit key: the salted
-    # aggregation, its bucket-total window, and the cold regroup all key on
-    # it, so one long instead of three columns narrows every one of those
-    # shuffles.  A cross-bucket hash collision (~rows^2/2^65) can only MERGE
-    # two buckets, adding false candidates the exact verify removes.
-    dstats: dict = {}
-    cands = stage(
-        "candidates",
-        ["profile"],
-        lambda: candidate_pairs(
-            profile_signatures(profile, cfg).select(
-                "image_id",
-                F.xxhash64("modality", "band", "bucket").alias("bucket"),
-            ),
-            bucket_cols=("bucket",),
-            hot_bucket_threshold=cfg.hot_bucket_threshold,
-            drop_stats=dstats,
-        ),
-        # the skew defense's exact recall-loss budget (hot_pairs_dropped =
-        # C(n,2) - (n-1) summed over hot buckets)
-        extra_metrics=lambda: {
-            f"hot_{k}": int(v)
-            for k, v in dstats["df"].collect()[0].asDict().items()
-        },
-    )
-    verified = stage(
-        "verified_pairs",
-        ["profile", "candidates"],
-        lambda: verify_pairs_from_profile(cands, profile, cfg),
-    )
-    edge_parents = ["verified_pairs"]
-    if cfg.substring_enabled:
-        # OR-union the substring modality (winnow -> fp join -> exact LCS
-        # verify) into the edge set before clustering: the engine's output
-        # is the OR of ALL duplicate modalities (SURVEY.md §7 M2) — a pair
-        # sharing a >= min_length caption substring is a duplicate even
-        # when its phash Hamming and shingle Jaccard both miss
-        from .operators.substring import substring_pairs
+    edge_parents, sub_future = ["verified_pairs"], None
+    # leaving the block waits for the substring thread, also on error
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        if cfg.substring_enabled:
+            # OR-union the substring modality (winnow -> fp join -> exact
+            # LCS verify) into the edge set before clustering: the engine's
+            # output is the OR of ALL duplicate modalities (SURVEY.md §7
+            # M2) — a pair sharing a >= min_length caption substring is a
+            # duplicate even when its phash Hamming and shingle Jaccard
+            # both miss.  It shares nothing with the image/caption branch
+            # until the edges, so its plan-time jobs overlap that branch's.
+            from .operators.substring import substring_pairs
 
-        sub = stage(
-            "substring_pairs",
-            [],
-            lambda: substring_pairs(
-                slim.select("image_id", F.col("caption").alias("text")),
-                cfg.substring,
-                id_col="image_id",
-                text_col="text",
-            ).select("a", "b"),
+            sub_future = pool.submit(
+                inheritable_thread_target(spark)(stage),
+                "substring_pairs",
+                [],
+                lambda: substring_pairs(
+                    slim.select("image_id", F.col("caption").alias("text")),
+                    cfg.substring,
+                    id_col="image_id",
+                    text_col="text",
+                    caches=caches,
+                ).select("a", "b"),
+            )
+            edge_parents.append("substring_pairs")
+        profile = stage("profile", [], lambda: multimodal_profile(slim, cfg))
+        # pack (modality, band, bucket) into one 64-bit key: the salted
+        # aggregation, its bucket-total window, and the cold regroup all
+        # key on it, so one long instead of three columns narrows every
+        # one of those shuffles.  A cross-bucket hash collision
+        # (~rows^2/2^65) can only MERGE two buckets, adding false
+        # candidates the exact verify removes.
+        dstats: dict = {}
+        cands = stage(
+            "candidates",
+            ["profile"],
+            lambda: candidate_pairs(
+                profile_signatures(profile, cfg).select(
+                    "image_id",
+                    F.xxhash64("modality", "band", "bucket").alias("bucket"),
+                ),
+                bucket_cols=("bucket",),
+                hot_bucket_threshold=cfg.hot_bucket_threshold,
+                drop_stats=dstats,
+            ),
+            # the skew defense's exact recall-loss budget (hot_pairs_dropped
+            # = C(n,2) - (n-1) summed over hot buckets)
+            extra_metrics=lambda: {
+                f"hot_{k}": int(v)
+                for k, v in dstats["df"].collect()[0].asDict().items()
+            },
         )
-        edge_parents.append("substring_pairs")
+        verified = stage(
+            "verified_pairs",
+            ["profile", "candidates"],
+            lambda: verify_pairs_from_profile(cands, profile, cfg),
+        )
+        sub = sub_future.result() if sub_future else None
     edges = stage(
         "edges",
         edge_parents,
         lambda: verified.unionByName(sub).dropDuplicates(["a", "b"])
-        if cfg.substring_enabled
+        if sub is not None
         else verified,
     )
     assignments_h = stage(
@@ -222,7 +261,7 @@ def _dedup_chain(images: DataFrame, cfg: PipelineConfig, stage) -> PipelineResul
         pairs = edges.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         )
-        return PipelineResult(assignments_h, pairs, dstats.get("df"))
+        return PipelineResult(assignments_h, pairs, dstats.get("df"), caches)
     assignments = stage(
         "map_back",
         ["assignments"],
@@ -242,10 +281,12 @@ def _dedup_chain(images: DataFrame, cfg: PipelineConfig, stage) -> PipelineResul
             F.greatest("_ia", "_ib").alias("b"),
         )
     )
-    return PipelineResult(assignments, pairs, dstats.get("df"))
+    return PipelineResult(assignments, pairs, dstats.get("df"), caches)
 
 
-def _in_memory_stage(name, parents, build, extra_metrics=None) -> DataFrame:
+def _in_memory_stage(
+    caches: list[DataFrame], name, parents, build, extra_metrics=None
+) -> DataFrame:
     """``dedup_pipeline``'s materialization policy: two caches, no writes."""
     df = build()
     if name == "profile":
@@ -255,19 +296,37 @@ def _in_memory_stage(name, parents, build, extra_metrics=None) -> DataFrame:
         # recomputes the Arrow profile (measured: 11 simultaneous ~4.5 s
         # jobs at bench scale).  One count pins it for all of them.
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        caches.append(df)
         df.count()
     elif name == "edges":
         # clustering reads the edges 2-3 times (fast-path count + collect,
         # or the distributed loop's seed checkpoint): run the verify once
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        caches.append(df)
     return df
 
 
 def dedup_pipeline(images: DataFrame, cfg: PipelineConfig | None = None) -> PipelineResult:
     """Production path: ONE fused Arrow-vectorized signature stage
     (operators/profile.py — the reference's bulked model), a single unified
-    bucket self-join, a compact int-array verify, then CC clustering."""
-    return _dedup_chain(images, cfg or PipelineConfig(), _in_memory_stage)
+    bucket self-join, a compact int-array verify, then CC clustering.
+
+    Building the result runs these Spark jobs before it returns: the
+    profile cache's count; substring_pairs' count of its scan pairs, which
+    picks its verify path, on a background thread (plus the grid path's
+    candidate checkpoint when that count is large); and the connected
+    components' edge collect (one job when the edges fit in memory, one
+    per round on the distributed path).  The result holds two or three
+    caches (profile, edges, substring's candidate set); use it in a
+    ``with`` block or call ``close()`` after the last action."""
+    caches: list[DataFrame] = []
+    try:
+        return _dedup_chain(
+            images, cfg or PipelineConfig(), partial(_in_memory_stage, caches), caches
+        )
+    except BaseException:
+        _unpersist(caches)
+        raise
 
 
 def pair_recall(found_pairs: DataFrame, true_pairs: DataFrame) -> float:

@@ -113,3 +113,78 @@ def test_threshold_guard(spark):
         candidate_pairs(
             _sigs(spark, [(0, 0, 1)]), id_col="member", hot_bucket_threshold=100000
         )
+
+
+def _brute_force(rows, T, min_shared):
+    """Reference semantics, row by row: cold buckets vote every pair (a
+    pair needs ``min_shared`` votes), hot buckets contribute only their
+    exact n - 1 chained-star edges, which always pass and connect the
+    bucket; drop totals follow."""
+    buckets = {}
+    for t, b, m in rows:
+        buckets.setdefault((t, b), []).append(m)
+    votes, hot_sizes = {}, []
+    for members in buckets.values():
+        if len(members) > T:
+            hot_sizes.append(len(members))
+            continue
+        for x, y in combinations(members, 2):
+            if x != y:
+                key = (min(x, y), max(x, y))
+                votes[key] = votes.get(key, 0) + 1
+    cold = {p for p, v in votes.items() if v >= min_shared}
+    dropped = sum(n * (n - 1) // 2 - (n - 1) for n in hot_sizes)
+    return cold, buckets, hot_sizes, dropped
+
+
+def test_mixed_hot_cold_min_shared_matches_brute_force(spark):
+    # cold buckets of 2-6 members with shared pairs across tables, plus two
+    # hot buckets; min_shared_buckets=2 keeps a cold pair only when two
+    # buckets enumerate it, while every hot edge passes
+    rows = []
+    for t in range(3):
+        for b in range(25):
+            rows += [(t, b, 10 * b + j) for j in range(2 + (b + t) % 5)]
+    rows += [(0, 900, m) for m in range(1000, 1040)]
+    rows += [(1, 901, m) for m in range(2000, 2030)] + [(1, 901, 5), (1, 901, 6)]
+    T = 8
+    cold, buckets, hot_sizes, dropped = _brute_force(rows, T, 2)
+    stats: dict = {}
+    got = {
+        (r["a"], r["b"])
+        for r in candidate_pairs(
+            _sigs(spark, rows), id_col="member", hot_bucket_threshold=T,
+            drop_stats=stats, min_shared_buckets=2,
+        ).collect()
+    }
+    assert cold <= got
+    # beyond the cold pairs, each hot bucket adds exactly n - 1 edges
+    # between its own members, which keep it one component
+    hot_edges = got - cold
+    n_inside = 0
+    for key in ((0, 900), (1, 901)):
+        members = set(buckets[key])
+        inside = {(a, b) for a, b in hot_edges if a in members and b in members}
+        assert len(inside) == len(members) - 1
+        assert len(set(_components(inside, members).values())) == 1
+        n_inside += len(inside)
+    assert n_inside == len(hot_edges)
+    row = stats["df"].collect()[0]
+    assert row["hot_buckets"] == len(hot_sizes)
+    assert row["pairs_dropped"] == dropped
+    assert row["max_bucket"] == max(hot_sizes)
+
+
+def test_building_candidate_pairs_runs_no_job(spark):
+    rows = [(t, m % 11, m) for t in range(2) for m in range(120)]
+    sigs = _sigs(spark, rows)
+    sigs.count()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    stats: dict = {}
+    candidate_pairs(
+        sigs, id_col="member", hot_bucket_threshold=5, drop_stats=stats,
+        min_shared_buckets=2,
+    )
+    # the tracker forgets old jobs, so compare only what is new
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

@@ -98,3 +98,25 @@ def test_shingle_hash_block_matches_direct_hash():
         got = sorted(int(x) for x in blk.h62[seg])
         want = sorted(int(x) for x in portable_hash62_np(shingle_set(t, 3)))
         assert got == want, t
+
+
+def test_shingle_hash_block_keeps_nul_tokens_distinct():
+    # a token or short text with an embedded NUL must not collapse onto its
+    # prefix: 'a\x00b' is its own token, and 'a', 'a\x00' and 'a\x00b' are
+    # three short-doc shingles
+    from lsh_project_spark.functions.textsig import (
+        shingle_hash_block,
+        shingle_set,
+    )
+
+    texts = ["a b c d e f", "a\x00b b c d e f", "a", "a\x00", "a\x00b"]
+    blk = shingle_hash_block(texts, 5)
+    per_doc = []
+    for i, t in enumerate(texts):
+        seg = blk.inv[blk.starts[i] : blk.starts[i] + blk.lengths[i]]
+        got = sorted(int(x) for x in blk.h62[seg])
+        want = sorted(int(x) for x in portable_hash62_np(shingle_set(t, 5)))
+        assert got == want, repr(t)
+        per_doc.append(set(got))
+    assert per_doc[0] != per_doc[1]
+    assert len({frozenset(s) for s in per_doc[2:]}) == 3

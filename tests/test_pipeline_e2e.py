@@ -116,3 +116,68 @@ def test_pixel_featurizer_runs(spark, images):
         v = np.array(r["features"], dtype=np.float32)
         assert v.shape == (64,)
         assert abs(np.linalg.norm(v) - 1.0) < 1e-3
+
+
+def _small_images(spark):
+    return images_table(spark, num_clusters=6, seed=3).select(
+        "image_id", "caption", "phash"
+    )
+
+
+def test_result_close_empties_the_cache_manager(spark):
+    """dedup_pipeline's caches (profile, edges, substring's candidate set)
+    belong to its result: leaving the ``with`` block unpersists them all."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with dedup_pipeline(_small_images(spark), PipelineConfig()) as res:
+        assert res.assignments.count() > 0
+        assert cache_manager.numCachedEntries() >= 3
+    assert res.caches == []
+    assert cache_manager.isEmpty()
+
+
+@pytest.mark.parametrize(
+    "target", ["operators.substring.substring_pairs", "pipeline.candidate_pairs"]
+)
+def test_chain_error_on_either_thread_propagates(spark, monkeypatch, target):
+    """The substring branch runs on a background thread: an error there or
+    on the main branch reaches the caller, and neither a thread nor a cache
+    outlives the call."""
+    import importlib
+    import threading
+
+    class Boom(RuntimeError):
+        pass
+
+    def fail(*args, **kwargs):
+        raise Boom(target)
+
+    module, name = target.rsplit(".", 1)
+    monkeypatch.setattr(
+        importlib.import_module(f"lsh_project_spark.{module}"), name, fail
+    )
+    spark.catalog.clearCache()
+    threads = threading.active_count()
+    with pytest.raises(Boom, match=target):
+        dedup_pipeline(_small_images(spark), PipelineConfig())
+    assert threading.active_count() == threads
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_background_substring_jobs_keep_the_callers_job_group(spark):
+    """Every job the chain runs while it builds, the background substring
+    branch's included, carries the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("dedup-chain-test", "dedup_pipeline build")
+    try:
+        with dedup_pipeline(_small_images(spark), PipelineConfig()):
+            pass
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the tracker forgets old jobs, so compare only what is new
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    # the profile count, substring's scan-pair count and the CC collect
+    assert len(tracker.getJobIdsForGroup("dedup-chain-test")) >= 3

@@ -113,3 +113,29 @@ def test_ann_topk_plans_equi_join_not_cross(spark):
     p = plan_str(ann_topk_lsh(base, queries, dim=4, k=3, n=40), mode="simple")
     assert "CartesianProduct" not in p, p
     assert "BroadcastNestedLoopJoin" not in p, p
+
+
+@pytest.mark.parametrize("min_shared", [1, 2])
+def test_candidate_pairs_runs_in_one_pass(spark, min_shared):
+    """candidate_pairs is one pass: its executed plan shuffles three times
+    (the salted aggregate, the bucket window, the pair dedup) — the
+    cold/hot regroup reuses the window's partitioning — and reads no
+    checkpointed RDD."""
+    from lsh_project_spark.operators.candidates import candidate_pairs
+
+    sigs = spark.range(600).select(
+        (F.col("id") % 3).cast("int").alias("table_idx"),
+        (F.col("id") * 7 % 13).alias("bucket"),
+        F.col("id").alias("member"),
+    )
+    df = candidate_pairs(
+        sigs, id_col="member", hot_bucket_threshold=25,
+        min_shared_buckets=min_shared,
+    )
+    df.collect()
+    qe = df._jdf.queryExecution()
+    final = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    assert final.count("Exchange hashpartitioning") == 3, final
+    assert "LogicalRDD" not in qe.optimizedPlan().toString()
+    assert "ExistingRDD" not in final, final
