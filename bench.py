@@ -167,7 +167,7 @@ def run_dedup(spark) -> tuple[float, int, dict]:
                 rep[key] = round(rep.get(key, 0.0) + time.time() - t, 2)
             return df
 
-        drop_stats = _dedup_chain(images, cfg, staged, []).drop_stats
+        drop_stats = _dedup_chain(images, cfg, staged).drop_stats
         rep["staged_total"] = round(sum(rep.values()), 2)
         staged_reps.append(rep)
         for k2, v in rep.items():

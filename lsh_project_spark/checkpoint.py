@@ -137,7 +137,4 @@ def checkpointed_dedup(
     # id mode are rebuilt, never misread.
     salt = "+v2:hashed" if _hashes_ids(images) else "+v2:raw"
     cp = CheckpointedPipeline(spark, root, cfg.config_hash() + salt)
-    res = _dedup_chain(images, cfg, cp.stage, [])
-    # every stage is on disk now: free substring's candidate cache
-    res.close()
-    return res.assignments
+    return _dedup_chain(images, cfg, cp.stage).assignments

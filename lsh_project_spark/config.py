@@ -103,7 +103,7 @@ class SubstringConfig:
     # (the winnow guarantee k + w - 1 = min_length holds by construction
     # of `window`).  Round-5 ran k=20: any shared 20-byte gram became a
     # candidate — ~1.0M candidate pairs per 66k-image bench shard, 98% of
-    # them rejected by the LCS verify, which made the Python cogroup the
+    # them rejected by the LCS verify, which made the Python verify the
     # single hottest stage of the whole pipeline.  k=35 makes a candidate
     # require a shared 35-byte winnowed gram: measured 41k scan pairs on
     # the same shard (24x fewer) for 2.6x more (narrow) fingerprint rows.

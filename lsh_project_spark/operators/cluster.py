@@ -206,7 +206,8 @@ def connected_components(
     a partition-local edge-contraction pre-pass (``contract=True``,
     _contract_local) followed by the distributed large-star/small-star
     loop on the contracted graph.  Pass driver_max_edges=0 to force the
-    distributed path."""
+    distributed path.  Raises RuntimeError when the distributed loop has
+    not converged after ``max_iter`` rounds."""
     # Lineage cut per round (Catalyst cannot express iteration):
     # - with a checkpoint dir set (sc.setCheckpointDir), use RELIABLE
     #   checkpoints — survive executor loss, the right mode on a real
@@ -269,6 +270,12 @@ def connected_components(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        # stopping here would label a partly merged graph as clusters
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter} "
+            "large-star/small-star rounds"
+        )
     # fixpoint is a star forest: edges are (child, root)
     children = cur.select(F.col("a").alias("id"), F.col("b").alias("cluster_id"))
     roots = cur.select(F.col("b").alias("id")).distinct().withColumn(
@@ -289,11 +296,9 @@ def connected_components(
             )
             .dropDuplicates(["id"])
         )
-    # materialize (eager checkpoint) while the caller's constraint-propagation
-    # guard is still in force: the union over the shared checkpointed subtree
-    # must be OPTIMIZED with the conf off, not merely planned — otherwise the
-    # UnionBase.rewriteConstraints crash the guard exists for fires at action
-    # time in sessions that enable constraint propagation
+    # hand the caller the labels as one checkpoint (eager: the union and
+    # the mapping join run here, once), not as a plan over the rounds'
+    # checkpoints
     return result.checkpoint(eager=True) if reliable else result.localCheckpoint(
         eager=True
     )

@@ -410,7 +410,10 @@ def near_dup_pairs(
         slim.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")),
         "id_b",
     )
-    accepted = joined.mapInPandas(_accept, schema="id_a long, id_b long")
+    id_type = dict(slim.dtypes)[id_col]
+    accepted = joined.mapInPandas(
+        _accept, schema=f"id_a {id_type}, id_b {id_type}"
+    )
     if not hash_ids:
         return accepted.select(
             F.least("id_a", "id_b").alias("id_a"),

@@ -2,7 +2,7 @@
 reference analog — mandated by the dedup graft, SURVEY.md §2.9).
 
 Finds document pairs sharing an exact common substring of >= min_length
-characters, at scale, in three stages:
+UTF-8 bytes, at scale, in three stages:
 
 1. **Winnowed fingerprints** (Schleimer et al. '03): per document, rolling
    polynomial hashes of char k-grams; keep the minimum hash of every
@@ -12,13 +12,13 @@ characters, at scale, in three stages:
    (sliding_window_view), shuffle-free.
 2. **Candidate pairs**: fingerprint equi-join (same bucket-join pattern as
    every other modality; hot-fingerprint star defense applies).
-3. **Exact verify**: per candidate pair, the exact longest-common-substring
-   length via vectorized diagonal-run scanning over shared g-gram positions
-   (lcs_len_via_diagonal_runs), cogrouped on a G x G grid of cells so each
-   document's text ships at most 2G-1 times regardless of partner count and
-   its g-gram hash array is computed once per cell, not once per pair; the
-   generalized *suffix array* + LCP (functions/suffix.py) remains the
-   fallback for low-entropy documents with quadratic match sets.
+3. **Exact verify**: both texts are joined onto each candidate pair and
+   one map stage computes the exact longest-common-substring length by
+   vectorized diagonal-run scanning over shared g-gram positions
+   (lcs_len_via_diagonal_runs); byte-identical texts take their byte
+   length directly.  The generalized *suffix array* + LCP
+   (functions/suffix.py) remains the fallback for low-entropy documents
+   with quadratic match sets.
 
 Cross-partition correctness is free: fingerprints are global values, the
 equi-join sees all documents regardless of partitioning.
@@ -83,14 +83,6 @@ def _kgram_hashes(text: str, k: int) -> np.ndarray:
     return out
 
 
-# below this many scan (non-equal-text) candidate pairs, substring_pairs
-# verifies by joining both texts onto each pair directly instead of the
-# grid cogroup: the shuffled payload is bounded by pairs x 2 x doc size
-# (~hundreds of MB worst case at the cap, spread over tasks), which is
-# cheaper than the grid's fixed plumbing until pair counts reach real
-# corpus scale
-_DIRECT_VERIFY_MAX_PAIRS = 200_000
-
 # diagonal-run match-pair budget: above this the run scan falls back to the
 # suffix-array verifier (low-entropy docs where one gram repeats heavily can
 # make |{(i,j): gram_a[i]=gram_b[j]}| quadratic; the SA path is O(n log n))
@@ -104,7 +96,7 @@ def lcs_len_via_diagonal_runs(
     """Exact longest-common-substring length, given it is >= g; returns 0
     when the two docs share no g-gram (i.e. LCS < g).  Pass precomputed
     g-gram hash arrays ``ha``/``hb`` to amortize them across the many pairs
-    one document participates in (the grid verify does).
+    one document participates in (``_lcs_accepts`` does).
 
     Method (the numpy port of the DuckDB oracle's formulation,
     plans/entry_queries.py substring_pairs): a common substring of length
@@ -156,9 +148,10 @@ def lcs_len_via_diagonal_runs(
 def _lcs_accepts(
     a: pd.Series, b: pd.Series, text_a: pd.Series, text_b: pd.Series, g: int
 ) -> pd.DataFrame:
-    """The exact substring verify kernel every verify path runs: aligned
-    (a, b, text_a, text_b) columns -> the (a, b, lcs_len) rows whose
-    longest common substring is >= g.  Each id's g-gram hash array is
+    """The exact substring verify kernel: aligned (a, b, text_a, text_b)
+    columns -> the (a, b, lcs_len) rows whose longest common substring is
+    >= g bytes.  Equal texts share all of their bytes, so their lcs_len is
+    the UTF-8 byte length without a scan.  Each id's g-gram hash array is
     computed once per call, however many pairs it is in (one id, one
     text)."""
     grams: dict = {}
@@ -171,7 +164,8 @@ def _lcs_accepts(
 
     lens = np.fromiter(
         (
-            lcs_len_via_diagonal_runs(ta, tb, g, g_of(x, ta), g_of(y, tb))
+            len(ta.encode("utf-8")) if ta == tb
+            else lcs_len_via_diagonal_runs(ta, tb, g, g_of(x, ta), g_of(y, tb))
             for x, y, ta, tb in zip(a, b, text_a, text_b)
         ),
         dtype=np.int64,
@@ -328,21 +322,14 @@ def winnowed_fingerprints(
 
 
 def verify_lcs_pairs(
-    cands: DataFrame, texts: DataFrame, min_len: int,
+    cands: DataFrame, docs: DataFrame, min_len: int,
     id_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:
-    """(a, b) candidates + (id, text) -> surviving (a, b) with an exact
-    common substring >= min_len.  Direct per-pair text join — the right
-    shape for SMALL pair sets (streaming micro-batches); the batch path
-    uses the grid cogroup in substring_pairs for large ones."""
-    return _join_verify(cands, texts, min_len, id_col, text_col).select("a", "b")
-
-
-def _join_verify(
-    cands: DataFrame, docs: DataFrame, min_len: int, id_col: str, text_col: str
-) -> DataFrame:
-    """(a, b) candidates -> accepted (a, b, lcs_len), both texts joined
-    onto every pair and verified in one map stage."""
+    """(a, b) candidates + (id, text) -> the accepted (a, b, lcs_len) rows,
+    those whose longest common substring is >= min_len bytes.  Both texts
+    are joined onto every pair and verified in one map stage
+    (:func:`_lcs_accepts`); the batch operator and the streaming substring
+    pass both verify here."""
     side = docs.select(F.col(id_col).alias("_did"), F.col(text_col).alias("_t"))
     joined = cands.join(
         side.select(F.col("_did").alias("a"), F.col("_t").alias("_ta")), "a"
@@ -351,7 +338,7 @@ def _join_verify(
     )
     a_type = dict(docs.dtypes)[id_col]
 
-    def verify_direct(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
                 yield _lcs_accepts(
@@ -359,22 +346,21 @@ def _join_verify(
                 )
 
     return joined.mapInPandas(
-        verify_direct, schema=f"a {a_type}, b {a_type}, lcs_len long"
+        verify, schema=f"a {a_type}, b {a_type}, lcs_len long"
     )
 
 
 def substring_pairs(
     docs: DataFrame, cfg: SubstringConfig, id_col: str = "doc_id",
-    text_col: str = "text", hot_threshold: int = 64, grid: int = 8,
-    min_shared_fps: int = 1, caches: list | None = None,
+    text_col: str = "text", hot_threshold: int = 64, min_shared_fps: int = 1,
 ) -> DataFrame:
     """(id, text) -> (a, b, lcs_len) pairs with an exact common substring of
-    >= cfg.min_length chars.
+    >= cfg.min_length bytes.
 
-    Building the result runs one Spark job, the scan-pair count that picks
-    the verify path (plus an eager checkpoint on the grid path).  The
-    candidate set stays cached until the caller's action is done: pass a
-    list as ``caches`` to receive it and unpersist it afterwards.
+    One lazy plan: winnowed fingerprints -> ``candidate_pairs`` over the
+    fingerprints (hot-fingerprint star defense) -> one text-join verify
+    (:func:`verify_lcs_pairs`).  Building it runs no Spark job and caches
+    nothing; the caller materializes it.
 
     ``min_shared_fps`` (default 1 = exact semantics) is the scale lever for
     near-threshold-heavy corpora: require candidates to share >= m winnowed
@@ -386,21 +372,9 @@ def substring_pairs(
     bound, not the operator's exact contract; the correctness gates run at
     the default m=1.
 
-    Verify runs on a **grid of cells** (the classic blocked theta-join
-    layout, Okcan & Riedewald '11): pair (a, b) lands in cell
-    (hash(a) mod G, hash(b) mod G), and each document's text ships to at
-    most 2G-1 cells — INDEPENDENT of how many duplicate partners it has.
-    The round-3 design joined both full texts onto every candidate pair,
-    so a doc with d partners shipped d times; here the shuffle carries each
-    needed (cell, doc) once, and the cogrouped verify computes the doc's
-    g-gram hash array once per cell instead of once per pair.  Per-cell
-    memory is (docs touching the cell) x doc size — pick ``grid`` so cells
-    fit an executor (G^2 cells; doubling G halves per-cell payload at the
-    cost of one extra text copy per doc).
-
     String ids are hashed to int64 at entry and mapped back at the end
     (least/greatest restores a < b by string order), so the fingerprint
-    join, candidate aggregation, and cell cogroup all move 8-byte keys —
+    join, candidate aggregation and verify joins all move 8-byte keys —
     the same long-key discipline as the image pipeline, which already
     passes hashed ids in.  Accepts and lcs_len are id-independent, so the
     output is bit-identical either way.
@@ -411,8 +385,7 @@ def substring_pairs(
             F.xxhash64(id_col).alias(id_col), F.col(text_col)
         )
         out = substring_pairs(
-            hashed, cfg, id_col, text_col, hot_threshold, grid,
-            min_shared_fps, caches,
+            hashed, cfg, id_col, text_col, hot_threshold, min_shared_fps
         )
         ma = idmap.select(F.col("_h").alias("a"), F.col(id_col).alias("_sa"))
         mb = idmap.select(F.col("_h").alias("b"), F.col(id_col).alias("_sb"))
@@ -430,109 +403,4 @@ def substring_pairs(
         hot_bucket_threshold=hot_threshold,
         min_shared_buckets=min_shared_fps,
     )
-    # EQUAL-TEXT fast path, fully JVM-side: for byte-identical texts the
-    # diagonal-run LCS is exactly the text's byte length (all L-g+1 grams
-    # shared, one diagonal), so pairs whose (xxhash64, octet_length) match
-    # are accepted with lcs_len = octet_length WITHOUT shipping texts to
-    # the Python cogroup — and duplicate-heavy corpora are dominated by
-    # exact caption copies, so this removes most ACCEPTED pairs (and their
-    # 2G-1 text copies) from the expensive verify stage.  Equality via a
-    # 64-bit hash + length is the same negligible-collision class as the
-    # 62-bit gram fingerprints the candidate stage already relies on.
-    # Equal texts SHORTER than min_length are exact rejects (their LCS is
-    # their full length), so they skip the scan too.
-    meta = docs.select(
-        F.col(id_col).alias("_mid"),
-        F.xxhash64(text_col).alias("_th"),
-        F.octet_length(text_col).cast("long").alias("_tl"),
-    )
-    cands = (
-        cands.join(
-            meta.select(F.col("_mid").alias("a"), F.col("_th").alias("_tha"),
-                        F.col("_tl").alias("_tla")), "a")
-        .join(
-            meta.select(F.col("_mid").alias("b"), F.col("_th").alias("_thb"),
-                        F.col("_tl").alias("_tlb")), "b")
-    )
-    # the candidate set feeds THREE branches (equal-text accepts, the
-    # cogroup pair side, and the doc-need list); materialize it ONCE with a
-    # persist + count — the count also decides the verify path below, and
-    # the (a, b, hash, len) rows are compact, far smaller than the
-    # signature table that produced them.  The direct path leaves this
-    # small cache (bounded by the fast-path threshold, a few MB) live until
-    # the caller's action completes and hands it to ``caches``; the grid
-    # path hands the set to a reliable checkpoint and unpersists.
-    from pyspark.storagelevel import StorageLevel
-
-    spark = docs.sparkSession
-    reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(cands)
-    min_len = cfg.min_length
-    a_type = dict(docs.dtypes)[id_col]
-    eq = (F.col("_tha") == F.col("_thb")) & (F.col("_tla") == F.col("_tlb"))
-    equal_pairs = (
-        cands.filter(eq & (F.col("_tla") >= min_len))
-        .select("a", "b", F.col("_tla").alias("lcs_len"))
-    )
-    scan_cands = cands.filter(~eq).select("a", "b")
-    # SMALL scan sets skip the grid entirely: below _DIRECT_VERIFY_MAX_PAIRS
-    # the 2G-1-copy cell machinery (cell checkpoint, need-list distinct,
-    # doc join, two-sided cogroup) costs more than just shipping both texts
-    # per pair through one map stage (a bounded ~pairs x 2 x doc-size
-    # shuffle; per-doc gram arrays still cached per batch).  The count is a
-    # cheap read of the cached candidate set, and the accept set is
-    # identical — the grid remains the path for pair volumes a real corpus
-    # produces.
-    if scan_cands.count() <= _DIRECT_VERIFY_MAX_PAIRS:
-        return equal_pairs.unionByName(
-            _join_verify(scan_cands, docs, min_len, id_col, text_col)
-        )
-    # BIG sets: hand the cached candidate set to a reliable checkpoint (the
-    # write job reads cached partitions, so nothing recomputes) and free
-    # the cache; the grid cogroup then runs over plan-truncated inputs.
-    if reliable:
-        cached = cands
-        cands = cached.checkpoint(eager=True)
-        cached.unpersist()
-        equal_pairs = (
-            cands.filter(eq & (F.col("_tla") >= min_len))
-            .select("a", "b", F.col("_tla").alias("lcs_len"))
-        )
-        scan_cands = cands.filter(~eq).select("a", "b")
-    G = grid
-    cells = scan_cands.select(
-        "a",
-        "b",
-        (F.pmod(F.xxhash64("a"), F.lit(G)) * G + F.pmod(F.xxhash64("b"), F.lit(G))).alias("cell"),
-    )
-    # the cell table still feeds BOTH cogroup sides (pairs + the doc-need
-    # list); its own checkpoint (a cheap projection of the checkpointed
-    # candidate set) keeps the cogroup's two plans from sharing a live
-    # subtree, which trips Spark's ambiguous-self-join analysis
-    cells = cells.checkpoint(eager=False) if reliable else cells.localCheckpoint(
-        eager=False
-    )
-    # the docs side's key is RENAMED (dcell) so the cogroup of two plans
-    # sharing the `cells` subtree doesn't trip Spark's ambiguous-self-join
-    # analysis; cogroup matches grouping keys positionally
-    need = (
-        cells.select("cell", F.explode(F.array("a", "b")).alias(id_col))
-        .distinct()
-    )
-    cell_docs = need.join(
-        docs.select(id_col, F.col(text_col).alias("_t")), id_col
-    ).select(F.col("cell").alias("dcell"), id_col, "_t")
-
-    def verify(pairs_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        texts = dict(zip(docs_pdf[id_col], docs_pdf["_t"]))
-        a, b = pairs_pdf["a"], pairs_pdf["b"]
-        return _lcs_accepts(a, b, a.map(texts), b.map(texts), min_len)
-
-    scanned = (
-        cells.groupby("cell")
-        .cogroup(cell_docs.groupby("dcell"))
-        .applyInPandas(verify, schema=f"a {a_type}, b {a_type}, lcs_len long")
-    )
-    return equal_pairs.unionByName(scanned)
+    return verify_lcs_pairs(cands, docs, cfg.min_length, id_col, text_col)

@@ -133,7 +133,7 @@ def _hashes_ids(images: DataFrame) -> bool:
 
 
 def _dedup_chain(
-    images: DataFrame, cfg: PipelineConfig, stage, caches: list[DataFrame]
+    images: DataFrame, cfg: PipelineConfig, stage
 ) -> PipelineResult:
     """The batch stage chain, composed once for every runner.
 
@@ -143,8 +143,8 @@ def _dedup_chain(
     only) is a zero-arg callable returning the hot-bucket drop totals.  The
     runners differ only in that callback: in memory (``dedup_pipeline``),
     Parquet checkpoints (``checkpoint.checkpointed_dedup``) or persist +
-    count barriers with timers (``bench.run_dedup``).  ``caches`` collects
-    what the chain's operators persist; the result's ``close()`` frees it.
+    count barriers with timers (``bench.run_dedup``).  The chain's
+    operators cache nothing; what a callback caches, its runner owns.
 
     Stages: profile -> candidates -> verified_pairs -> edges -> assignments
     -> map_back (string ids only).  When enabled, substring_pairs runs on
@@ -207,7 +207,6 @@ def _dedup_chain(
                     cfg.substring,
                     id_col="image_id",
                     text_col="text",
-                    caches=caches,
                 ).select("a", "b"),
             )
             edge_parents.append("substring_pairs")
@@ -261,7 +260,7 @@ def _dedup_chain(
         pairs = edges.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         )
-        return PipelineResult(assignments_h, pairs, dstats.get("df"), caches)
+        return PipelineResult(assignments_h, pairs, dstats.get("df"))
     assignments = stage(
         "map_back",
         ["assignments"],
@@ -281,20 +280,23 @@ def _dedup_chain(
             F.greatest("_ia", "_ib").alias("b"),
         )
     )
-    return PipelineResult(assignments, pairs, dstats.get("df"), caches)
+    return PipelineResult(assignments, pairs, dstats.get("df"))
 
 
 def _in_memory_stage(
     caches: list[DataFrame], name, parents, build, extra_metrics=None
 ) -> DataFrame:
-    """``dedup_pipeline``'s materialization policy: two caches, no writes."""
+    """``dedup_pipeline``'s materialization policy: cache profile,
+    substring_pairs and edges; write nothing."""
     df = build()
-    if name == "profile":
+    if name in ("profile", "substring_pairs"):
         # fill the cache BEFORE the plan fans out: the profile feeds the
         # signature union, both verify sides and the CC node list, and AQE
         # runs those first-wave stages CONCURRENTLY — on a cold cache each
         # recomputes the Arrow profile (measured: 11 simultaneous ~4.5 s
-        # jobs at bench scale).  One count pins it for all of them.
+        # jobs at bench scale).  One count pins it for all of them.  The
+        # substring pairs are counted on their background thread, so
+        # their whole plan runs while the image branch does.
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         caches.append(df)
         df.count()
@@ -312,21 +314,22 @@ def dedup_pipeline(images: DataFrame, cfg: PipelineConfig | None = None) -> Pipe
     bucket self-join, a compact int-array verify, then CC clustering.
 
     Building the result runs these Spark jobs before it returns: the
-    profile cache's count; substring_pairs' count of its scan pairs, which
-    picks its verify path, on a background thread (plus the grid path's
-    candidate checkpoint when that count is large); and the connected
+    profile cache's count; the substring pairs' count, on a background
+    thread, when the substring modality is enabled; and the connected
     components' edge collect (one job when the edges fit in memory, one
-    per round on the distributed path).  The result holds two or three
-    caches (profile, edges, substring's candidate set); use it in a
+    per round on the distributed path).  The result holds the caches of
+    profile, edges and (when enabled) the substring pairs; use it in a
     ``with`` block or call ``close()`` after the last action."""
     caches: list[DataFrame] = []
     try:
-        return _dedup_chain(
-            images, cfg or PipelineConfig(), partial(_in_memory_stage, caches), caches
+        res = _dedup_chain(
+            images, cfg or PipelineConfig(), partial(_in_memory_stage, caches)
         )
     except BaseException:
         _unpersist(caches)
         raise
+    res.caches = caches
+    return res
 
 
 def pair_recall(found_pairs: DataFrame, true_pairs: DataFrame) -> float:

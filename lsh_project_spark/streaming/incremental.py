@@ -196,99 +196,111 @@ class IncrementalDedup:
         """foreachBatch body: profile the new rows, pair them against the
         store AND against each other, verify, append state."""
         cfg = self.cfg
-        new_profile = multimodal_profile(
-            batch_df.select("image_id", "caption", "phash"), cfg
-        ).persist()
-        if new_profile.isEmpty():
-            new_profile.unpersist()
-            return
-        new_sigs = self._with_pbucket(profile_signatures(new_profile, cfg)).persist()
+        # every DataFrame this batch persists is unpersisted when it ends,
+        # whether it returns or raises
+        caches: list[DataFrame] = []
 
-        # intra-batch candidates go through the SAME salted/star-defended
-        # path as the batch pipeline, so a degenerate bucket inside one
-        # micro-batch is bounded exactly like anywhere else (round-3 fix:
-        # this was the one candidate generator bypassing the defense)
-        intra = candidate_pairs(
-            new_sigs,
-            bucket_cols=("modality", "band", "bucket"),
-            hot_bucket_threshold=cfg.hot_bucket_threshold,
-        )
+        def cache(df: DataFrame) -> DataFrame:
+            caches.append(df.persist())
+            return df
 
-        if self._store_exists():
-            # new-vs-store: read ONLY the store partitions the new batch's
-            # buckets hash into (exact pruning — equal (modality, band,
-            # bucket) implies equal pbucket), cap the pruned subset per
-            # bucket (skew defense), broadcast the new side.  Only the
-            # pruned per-batch subset ever shuffles (for the cap's ranking)
-            # — never the store as a whole.
-            hit = [r["pbucket"] for r in new_sigs.select("pbucket").distinct().collect()]
-            store_sigs = _cap_per_bucket(
-                self.spark.read.parquet(self.sig_store_path).filter(
-                    F.col("pbucket").isin(hit)
-                ),
-                ("modality", "band", "bucket"),
-                cfg.hot_bucket_threshold,
+        try:
+            new_profile = cache(multimodal_profile(
+                batch_df.select("image_id", "caption", "phash"), cfg
+            ))
+            if new_profile.isEmpty():
+                return
+            new_sigs = cache(self._with_pbucket(profile_signatures(new_profile, cfg)))
+
+            # intra-batch candidates go through the SAME salted/star-defended
+            # path as the batch pipeline, so a degenerate bucket inside one
+            # micro-batch is bounded exactly like anywhere else (round-3 fix:
+            # this was the one candidate generator bypassing the defense)
+            intra = candidate_pairs(
+                new_sigs,
+                bucket_cols=("modality", "band", "bucket"),
+                hot_bucket_threshold=cfg.hot_bucket_threshold,
             )
-            cross = (
-                store_sigs.select(
-                    "modality", "band", "bucket", F.col("image_id").alias("a")
-                )
-                .join(
-                    F.broadcast(
-                        new_sigs.select(
-                            "modality", "band", "bucket", F.col("image_id").alias("b")
-                        )
+
+            if self._store_exists():
+                # new-vs-store: read ONLY the store partitions the new batch's
+                # buckets hash into (exact pruning — equal (modality, band,
+                # bucket) implies equal pbucket), cap the pruned subset per
+                # bucket (skew defense), broadcast the new side.  Only the
+                # pruned per-batch subset ever shuffles (for the cap's ranking)
+                # — never the store as a whole.
+                hit = [
+                    r["pbucket"]
+                    for r in new_sigs.select("pbucket").distinct().collect()
+                ]
+                store_sigs = _cap_per_bucket(
+                    self.spark.read.parquet(self.sig_store_path).filter(
+                        F.col("pbucket").isin(hit)
                     ),
-                    ["modality", "band", "bucket"],
+                    ("modality", "band", "bucket"),
+                    cfg.hot_bucket_threshold,
                 )
-                .filter(F.col("a") != F.col("b"))
-                .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            )
-            cands = cross.unionByName(intra).dropDuplicates(["a", "b"]).persist()
-            cand_ids = (
-                cands.select(F.col("a").alias("image_id"))
-                .unionByName(cands.select(F.col("b").alias("image_id")))
-                .distinct()
-            )
-            all_profile = self._read_profiles_for(cand_ids).unionByName(new_profile)
-        else:
-            cands = intra.dropDuplicates(["a", "b"]).persist()
-            all_profile = new_profile
+                cross = (
+                    store_sigs.select(
+                        "modality", "band", "bucket", F.col("image_id").alias("a")
+                    )
+                    .join(
+                        F.broadcast(
+                            new_sigs.select(
+                                "modality", "band", "bucket",
+                                F.col("image_id").alias("b"),
+                            )
+                        ),
+                        ["modality", "band", "bucket"],
+                    )
+                    .filter(F.col("a") != F.col("b"))
+                    .select(
+                        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
+                    )
+                )
+                cands = cache(cross.unionByName(intra).dropDuplicates(["a", "b"]))
+                cand_ids = (
+                    cands.select(F.col("a").alias("image_id"))
+                    .unionByName(cands.select(F.col("b").alias("image_id")))
+                    .distinct()
+                )
+                all_profile = self._read_profiles_for(cand_ids).unionByName(new_profile)
+            else:
+                cands = cache(intra.dropDuplicates(["a", "b"]))
+                all_profile = new_profile
 
-        pairs = verify_pairs_from_profile(cands, all_profile, cfg)
-        new_fps = None
-        if cfg.substring_enabled:
-            pairs, new_fps = self._substring_batch(batch_df, pairs)
-        pairs = pairs.persist()
-        if self.pairs_table is not None:
-            self.pairs_table.commit_append(
-                pairs, note=f"micro-batch {batch_id}", batch_id=batch_id
+            pairs = verify_pairs_from_profile(cands, all_profile, cfg)
+            new_fps = None
+            if cfg.substring_enabled:
+                pairs, new_fps = self._substring_batch(batch_df, pairs, cache)
+            pairs = cache(pairs)
+            if self.pairs_table is not None:
+                self.pairs_table.commit_append(
+                    pairs, note=f"micro-batch {batch_id}", batch_id=batch_id
+                )
+            else:
+                pairs.write.mode("append").parquet(self.pairs_path)
+            self._update_assignments(
+                new_profile.select("image_id"), pairs
             )
-        else:
-            pairs.write.mode("append").parquet(self.pairs_path)
-        self._update_assignments(
-            new_profile.select("image_id"), pairs
-        )
-        pairs.unpersist()
-        new_sigs.write.mode("append").partitionBy("pbucket").parquet(
-            self.sig_store_path
-        )
-        self._with_pid(new_profile).write.mode("append").partitionBy("pid").parquet(
-            self.store_path
-        )
-        if new_fps is not None:
-            new_fps.write.mode("append").partitionBy("pfp").parquet(
-                self.fp_store_path
+            new_sigs.write.mode("append").partitionBy("pbucket").parquet(
+                self.sig_store_path
             )
-            self._with_pid(
-                batch_df.select("image_id", F.col("caption").alias("text"))
-            ).write.mode("append").partitionBy("pid").parquet(
-                self.caption_store_path
+            self._with_pid(new_profile).write.mode("append").partitionBy("pid").parquet(
+                self.store_path
             )
-            new_fps.unpersist()
-        cands.unpersist()
-        new_sigs.unpersist()
-        new_profile.unpersist()
+            if new_fps is not None:
+                new_fps.write.mode("append").partitionBy("pfp").parquet(
+                    self.fp_store_path
+                )
+                self._with_pid(
+                    batch_df.select("image_id", F.col("caption").alias("text"))
+                ).write.mode("append").partitionBy("pid").parquet(
+                    self.caption_store_path
+                )
+        finally:
+            for df in caches:
+                df.unpersist()
         self._batches_since_compact += 1
         if self._batches_since_compact >= self.compact_every:
             self.compact()
@@ -309,7 +321,7 @@ class IncrementalDedup:
         )
         return store.join(F.broadcast(ids), "image_id", "left_semi").drop("pid")
 
-    def _substring_batch(self, batch_df: DataFrame, pairs: DataFrame):
+    def _substring_batch(self, batch_df: DataFrame, pairs: DataFrame, cache):
         """Substring modality, incrementally: winnow the new captions, pair
         them against the accumulated fingerprint store (partition-pruned,
         broadcast-joined — mirroring the signature path) and against each
@@ -319,9 +331,9 @@ class IncrementalDedup:
 
         cfg = self.cfg
         texts_new = batch_df.select("image_id", F.col("caption").alias("text"))
-        new_fps = winnowed_fingerprints(
+        new_fps = cache(winnowed_fingerprints(
             texts_new, cfg.substring, id_col="image_id", text_col="text"
-        ).withColumn("pfp", F.pmod(F.xxhash64("fp"), F.lit(self.P))).persist()
+        ).withColumn("pfp", F.pmod(F.xxhash64("fp"), F.lit(self.P))))
         sub_cands = candidate_pairs(
             new_fps, id_col="image_id", bucket_cols=("fp",),
             hot_bucket_threshold=_FP_HOT,
@@ -361,7 +373,7 @@ class IncrementalDedup:
         survivors = verify_lcs_pairs(
             sub_cands, texts_all, cfg.substring.min_length,
             id_col="image_id", text_col="text",
-        )
+        ).select("a", "b")
         return pairs.unionByName(survivors), new_fps
 
     # ----------------------------------------- incremental cluster maintenance

@@ -122,6 +122,24 @@ def test_near_dup_pairs_planted_exact(spark):
     assert got == want
 
 
+def test_near_dup_pairs_keeps_the_id_type(spark):
+    """int ids come back as int, not widened to long, and the pair is
+    still found."""
+    from lsh_project_spark.operators.similarity import near_dup_pairs
+
+    rng = np.random.Generator(np.random.PCG64(7))
+    v = rng.normal(size=64)
+    rows = [
+        (1, v.tolist()),
+        (2, (v + rng.normal(scale=0.01, size=64)).tolist()),
+        (3, (-v).tolist()),
+    ]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    out = near_dup_pairs(df, threshold=0.85, dim=64)
+    assert dict(out.dtypes) == {"id_a": "int", "id_b": "int"}
+    assert [tuple(r) for r in out.collect()] == [(1, 2)]
+
+
 def test_near_dup_pairs_no_false_accepts_below_threshold(spark):
     """Random unit vectors (max pairwise cos << threshold) yield no pairs."""
     from lsh_project_spark.operators.similarity import near_dup_pairs

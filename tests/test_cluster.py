@@ -69,6 +69,15 @@ def test_cc_chain_graph(spark, driver_max):
     assert len(got) == n
 
 
+def test_cc_raises_when_it_does_not_converge(spark):
+    """A 64-node path needs several large-star/small-star rounds; capping
+    the distributed loop at one must raise, not return partial labels."""
+    edges = [(i, i + 1) for i in range(63)]
+    edf = spark.createDataFrame(edges, "a long, b long")
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edf, driver_max_edges=0, contract=False, max_iter=1)
+
+
 def test_cc_string_ids(spark):
     edges = [("imgB", "imgA"), ("imgC", "imgB"), ("imgX", "imgY")]
     edf = spark.createDataFrame(edges, "a string, b string")

@@ -139,3 +139,26 @@ def test_candidate_pairs_runs_in_one_pass(spark, min_shared):
     assert final.count("Exchange hashpartitioning") == 3, final
     assert "LogicalRDD" not in qe.optimizedPlan().toString()
     assert "ExistingRDD" not in final, final
+
+
+def test_substring_pairs_runs_as_one_plan(spark):
+    """substring_pairs executes as one plan: no cached relation, no
+    checkpointed RDD and no cogroup anywhere in it."""
+    from lsh_project_spark.config import SubstringConfig
+    from lsh_project_spark.operators.substring import substring_pairs
+
+    shared = "the quick brown fox jumps over the lazy dog and then runs far away home"
+    # built from a range, so any RDD scan in the plan is the operator's own
+    docs = spark.range(8).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc "), F.col("id").cast("string"), F.lit(" " + shared))
+        .alias("text"),
+    )
+    df = substring_pairs(docs, SubstringConfig(min_length=50, kgram=20))
+    assert len(df.collect()) == 28
+    qe = df._jdf.queryExecution()
+    plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    assert "isFinalPlan=true" in plans, plans
+    for node in ("InMemoryRelation", "InMemoryTableScan", "LogicalRDD",
+                 "ExistingRDD", "FlatMapCoGroupsInPandas"):
+        assert node not in plans, plans

@@ -453,3 +453,25 @@ def test_streaming_sink_compaction_mid_stream(spark, tmp_path):
 
     stream_pairs = {(r["a"], r["b"]) for r in inc.verified_pairs().collect()}
     assert stream_pairs == batch_pairs
+
+
+def test_failed_batch_leaves_no_cache(spark, tmp_path, monkeypatch):
+    """A micro-batch that raises mid-way still unpersists everything it
+    persisted (profile, signatures, candidates)."""
+    from lsh_project_spark.streaming import incremental
+
+    class Boom(RuntimeError):
+        pass
+
+    def fail(*args, **kwargs):
+        raise Boom("verify")
+
+    monkeypatch.setattr(incremental, "verify_pairs_from_profile", fail)
+    images = images_table(spark, num_clusters=4, seed=5).select(
+        "image_id", "caption", "phash"
+    )
+    spark.catalog.clearCache()
+    inc = IncrementalDedup(spark, str(tmp_path / "state"), PipelineConfig())
+    with pytest.raises(Boom):
+        inc.process_batch(images, 0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

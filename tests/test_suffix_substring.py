@@ -104,13 +104,16 @@ def test_substring_pairs_spark(spark):
     assert got[(0, 1)] >= len(shared)
 
 
-def test_substring_grid_verify_matches_direct(spark, monkeypatch):
-    """The grid cogroup verify (taken above _DIRECT_VERIFY_MAX_PAIRS scan
-    pairs) accepts exactly the direct path's (a, b, lcs_len) set."""
-    from lsh_project_spark.operators import substring
+def test_substring_pairs_match_brute_force(spark):
+    """substring_pairs accepts exactly the pairs a brute-force oracle does
+    (exact LCS over all pairs, kept when >= min_length bytes), with the
+    same lcs_len.  Equal texts take their UTF-8 byte length, and equal
+    texts shorter than min_length are rejected."""
+    from itertools import combinations
 
     cfg = SubstringConfig(min_length=50, kgram=20)
     shared = "the quick brown fox jumps over the lazy dog and then runs far away home"
+    accented = "déjà vu: ünïcödé text that repeats itself across two documents ✓"
     docs = [
         (0, "prefix one " + shared + " suffix alpha"),
         (1, "totally different beginning " + shared),
@@ -118,20 +121,38 @@ def test_substring_grid_verify_matches_direct(spark, monkeypatch):
         (3, "another completely unrelated document about spark and parquet files"),
         (4, "prefix one " + shared + " suffix alpha"),
         (5, shared[:40] + " and an ending that is not shared by anyone else"),
+        (6, accented),
+        (7, accented),
+        (8, "short equal text"),
+        (9, "short equal text"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        (r["a"], r["b"], r["lcs_len"])
+        for r in substring_pairs(df, cfg).collect()
+    }
+    want = set()
+    for (a, ta), (b, tb) in combinations(docs, 2):
+        n = longest_common_substring_len(ta, tb)
+        if n >= cfg.min_length:
+            want.add((a, b, n))
+    assert got == want
+    assert {(a, b) for a, b, _ in want} == {(0, 1), (0, 4), (1, 4), (6, 7)}
+    assert (6, 7, len(accented.encode("utf-8"))) in got
 
-    def accepted():
-        return {
-            (r["a"], r["b"], r["lcs_len"])
-            for r in substring_pairs(df, cfg).collect()
-        }
 
-    direct = accepted()
-    monkeypatch.setattr(substring, "_DIRECT_VERIFY_MAX_PAIRS", 0)
-    grid = accepted()
-    assert grid == direct
-    assert {(a, b) for a, b, _ in direct} == {(0, 1), (0, 4), (1, 4)}
+def test_building_substring_pairs_runs_no_job_and_caches_nothing(spark):
+    cfg = SubstringConfig(min_length=50, kgram=20)
+    docs = [(f"d{i}", f"document {i} " + "shared tail text " * 5) for i in range(6)]
+    df = spark.createDataFrame(docs, "doc_id string, text string")
+    df.count()
+    spark.catalog.clearCache()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    substring_pairs(df, cfg)
+    # the tracker forgets old jobs, so compare only what is new
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_winnowed_fingerprints_deterministic(spark):
