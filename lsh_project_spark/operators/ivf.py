@@ -97,6 +97,12 @@ def ivf_fit_centroids(
 # ------------------------------------------------------------------ search
 
 
+# cap on the elements of the [rows, n_lists, dim] float64 product/accumulate
+# temporaries in _ivf_scores_np (2^21 x 8 B = 16 MB each), so a batch's
+# memory does not grow with n_lists x dim (cf. similarity._SIGN_BLOCK)
+_SCORE_BLOCK_ELEMS = 1 << 21
+
+
 def _ivf_scores_np(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     """[n, n_lists] rank scores |c|^2 - 2 v.c with the EXACT doubles of the
     DuckDB oracle (duckdb_ivf_topk_sql): per (row, centroid) the dot is a
@@ -104,12 +110,18 @@ def _ivf_scores_np(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     list_dot_product fold; products of a float-cast-to-double by a double
     literal round identically), and c2 uses the same numpy row sums that
     function renders as literals — so scores, argmin choices, and tie
-    decisions are bit-identical to the oracle."""
+    decisions are bit-identical to the oracle.  Rows go in blocks of at
+    most _SCORE_BLOCK_ELEMS product elements; each score depends on its
+    own row only, so blocking changes no bit."""
     cents = np.asarray(cents, dtype=np.float64)
     c2 = (cents * cents).sum(axis=1)  # duckdb_ivf_topk_sql's c2 literals
-    prods = x[:, None, :] * cents[None, :, :]  # [n, L, d]
-    dots = np.add.accumulate(prods, axis=2)[:, :, -1]
-    return c2[None, :] - 2.0 * dots
+    step = max(1, _SCORE_BLOCK_ELEMS // cents.size)
+    out = np.empty((len(x), len(cents)), dtype=np.float64)
+    for lo in range(0, len(x), step):
+        prods = x[lo : lo + step, None, :] * cents[None, :, :]  # [b, L, d]
+        dots = np.add.accumulate(prods, axis=2)[:, :, -1]
+        out[lo : lo + step] = c2[None, :] - 2.0 * dots
+    return out
 
 
 def ivf_assign(

@@ -3,7 +3,9 @@
 Tuned for the sandbox (local[N], single JVM) but every knob is the one
 you'd set on a 1000-executor cluster: AQE on (runtime partition coalescing
 + skew-join splitting), Arrow-vectorized Python exchange, explicit shuffle
-partitions scaled with parallelism.
+partitions scaled with parallelism.  Local sessions run their Python
+workers from ``worker_daemon``, which spares every task pyspark's re-read
+of the zips on the worker's path.
 """
 
 from __future__ import annotations
@@ -11,6 +13,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the sys.path entry this package was imported from: the repo directory,
+# or the zip that spark-submit --py-files put on the driver's path
+_PATH_ENTRY = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def _default_driver_mem() -> str:
@@ -62,9 +69,11 @@ def get_spark(
         )
         # small scan splits so modest local inputs still fan out across all
         # cores without an extra repartition shuffle (the Arrow profile
-        # stage parallelizes over scan splits); at warehouse scale inputs
-        # have millions of splits at any setting, so this only costs a few
-        # extra task launches there
+        # stage parallelizes over scan splits).  Each extra Python task
+        # costs ~0.05 s of worker CPU under the repo daemon below (~0.4 s
+        # under pyspark's own; trivial mapInArrow tasks, 4-core host).  At
+        # warehouse scale inputs have millions of splits at any setting,
+        # so there this setting adds few tasks
         .config("spark.sql.files.maxPartitionBytes", "4m")
         # let AQE re-plan cached DataFrames too (the pipeline persists its
         # profile and edges; default false pins their partitioning)
@@ -95,7 +104,21 @@ def get_spark(
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     )
-    for k, v in (extra or {}).items():
+    extra = dict(extra or {})
+    if extra.get("spark.master", "local").startswith("local"):
+        # Python workers fork from worker_daemon, which stops each task's
+        # importlib.invalidate_caches() from re-reading every zip on the
+        # worker's path (~0.3 s of worker CPU per task; see its docstring).
+        # The daemon starts before any --py-files zip reaches the worker's
+        # path, so the entry the driver imported this package from goes on
+        # the workers' PYTHONPATH, ahead of any caller value.  Local masters
+        # only: there the driver's path entry is valid on the workers.
+        theirs = extra.get(_EXECUTOR_PYTHONPATH, "").split(os.pathsep)
+        extra[_EXECUTOR_PYTHONPATH] = os.pathsep.join(
+            [_PATH_ENTRY] + [p for p in theirs if p and p != _PATH_ENTRY]
+        )
+        b = b.config("spark.python.daemon.module", "lsh_project_spark.worker_daemon")
+    for k, v in extra.items():
         b = b.config(k, v)
     # reliable RDD checkpoints for iterative operators (connected
     # components, substring cells): measured ~2x on 50M-edge CC vs

@@ -2,11 +2,15 @@
 partial probe, and plan-shape invariants (assignment is a projection; the
 probe side broadcasts)."""
 
+import duckdb
 import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
+from lsh_project_spark.operators import ivf
 from lsh_project_spark.operators.ivf import (
+    _ivf_scores_np,
     ivf_assign,
     ivf_fit,
     ivf_fit_centroids,
@@ -103,3 +107,37 @@ def test_assignment_is_projection_and_probes_broadcast(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in tplan  # corpus never shuffles for probing
+
+
+def test_blocked_scores_match_the_duckdb_oracle(monkeypatch):
+    """_ivf_scores_np in 5-row blocks gives the same doubles as one block
+    and as the oracle's c2 - 2.0 * list_dot_product(v, c), on rows on both
+    sides of every block boundary."""
+    rng = np.random.Generator(np.random.PCG64(11))
+    X = rng.normal(size=(37, 8)).astype(np.float32)
+    cents = np.round(rng.normal(size=(4, 8)), 6)
+    whole = _ivf_scores_np(X.astype(np.float64), cents)
+    monkeypatch.setattr(ivf, "_SCORE_BLOCK_ELEMS", 5 * cents.size + 7)
+    blocked = _ivf_scores_np(X.astype(np.float64), cents)
+
+    con = duckdb.connect()
+    con.register("embeddings", pa.table({
+        "vec_id": np.arange(len(X)),
+        "embedding": pa.array(list(X), type=pa.list_(pa.float32())),
+    }))
+    rows = ", ".join(
+        "({}, [{}]::DOUBLE[], CAST('{!r}' AS DOUBLE))".format(
+            i,
+            ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in row),
+            float((row * row).sum()),
+        )
+        for i, row in enumerate(cents)
+    )
+    scores = con.execute(f"""
+        WITH cents(i, c, c2) AS (VALUES {rows})
+        SELECT c2 - 2.0 * list_dot_product(embedding::DOUBLE[], c)
+        FROM embeddings CROSS JOIN cents ORDER BY vec_id, i
+    """).fetchall()
+    oracle = np.array([s for (s,) in scores]).reshape(whole.shape)
+    assert np.array_equal(blocked, whole)
+    assert np.array_equal(blocked, oracle)

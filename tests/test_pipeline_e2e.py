@@ -125,7 +125,7 @@ def _small_images(spark):
 
 
 def test_result_close_empties_the_cache_manager(spark):
-    """dedup_pipeline's caches (profile, edges, substring's candidate set)
+    """dedup_pipeline's caches (profile, the substring pairs, edges)
     belong to its result: leaving the ``with`` block unpersists them all."""
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
@@ -179,5 +179,5 @@ def test_background_substring_jobs_keep_the_callers_job_group(spark):
         sc.setLocalProperty("spark.job.description", None)
     # the tracker forgets old jobs, so compare only what is new
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
-    # the profile count, substring's scan-pair count and the CC collect
+    # the profile count, the substring pairs' count and the CC collect
     assert len(tracker.getJobIdsForGroup("dedup-chain-test")) >= 3
