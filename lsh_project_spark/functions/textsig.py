@@ -36,7 +36,7 @@ from .hashing import (
 )
 
 H32 = 1 << 32
-SIMHASH_BITS = 56
+SIMHASH_BITS = 56  # bits 0..55 of hash62 >> 4: every bit op stays in signed int64
 _SPACE = 32  # codepoint of the shingle separator
 
 

@@ -11,8 +11,9 @@ and Beyond", SoCC'14) as a driver-side loop of DataFrame exchanges:
               with smaller-neighbors N-(u), m = min(N-(u) ∪ {u});
               emit (v, m) for v in N-(u) ∪ {u}, v != m.
 
-Each phase is one groupBy-min + one join; ``localCheckpoint`` cuts lineage
-every round (Catalyst cannot express iteration — SURVEY.md §4).  Converges
+Each phase is one window shuffle (see the note below); a checkpoint cuts
+lineage every round (Catalyst cannot express iteration — SURVEY.md §4).
+A partition-local contraction pre-pass shrinks the graph first.  Converges
 when the edge set reaches a fixpoint (a forest of depth-1 stars); expected
 O(log^2 n) rounds.  cluster_id = min node id in the component.  Node ids
 may be strings or longs.
@@ -196,15 +197,14 @@ def _contract_local(edges: DataFrame, partitions: int | None = None) -> DataFram
 def connected_components(
     edges: DataFrame, max_iter: int = 50,
     driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-    contract: bool = True,
 ) -> DataFrame:
     """(a, b) undirected edge list -> (id, cluster_id) for every non-isolated
     node.  Union the full node set downstream if singletons matter.
 
     Graphs at or below ``driver_max_edges`` resolve with an in-memory
     union-find on the driver (one collect, milliseconds); larger graphs run
-    a partition-local edge-contraction pre-pass (``contract=True``,
-    _contract_local) followed by the distributed large-star/small-star
+    a partition-local edge-contraction pre-pass (_contract_local)
+    followed by the distributed large-star/small-star
     loop on the contracted graph.  Pass driver_max_edges=0 to force the
     distributed path.  Raises RuntimeError when the distributed loop has
     not converged after ``max_iter`` rounds."""
@@ -234,35 +234,30 @@ def connected_components(
         if len(head) <= driver_max_edges:
             return _driver_union_find(raw, pdf=head)
 
-    mapping = None
-    if contract:
-        # partition-local contraction consumes the RAW edge list — its
-        # in-partition union-find absorbs duplicate edges for free, so the
-        # full-width dedup shuffle + checksum pass over the original edges
-        # is skipped entirely (one less pass over the biggest dataset)
-        combined = _cut(_contract_local(raw))
-        mapping = combined.filter("kind = 0").select(
-            F.col("x").alias("id"), F.col("y").alias("root")
-        )
-        # a node seen in several partitions has several local roots; bridge
-        # them (root star per node) so the contracted graph preserves
-        # cross-partition connectivity
-        w = Window.partitionBy("id")
-        bridge = (
-            mapping.select("root", F.min("root").over(w).alias("mr"))
-            .filter(F.col("root") != F.col("mr"))
-            .select(F.col("mr").alias("a"), F.col("root").alias("b"))
-        )
-        cur = _cut(
-            combined.filter("kind = 1")
-            .select(F.col("x").alias("a"), F.col("y").alias("b"))
-            .unionByName(bridge)
-            .dropDuplicates(["a", "b"])
-        )
-        prev_sum = _edge_checksum(cur)
-    else:
-        cur = _cut(raw.dropDuplicates(["a", "b"]))
-        prev_sum = _edge_checksum(cur)
+    # partition-local contraction consumes the RAW edge list — its
+    # in-partition union-find absorbs duplicate edges for free, so the
+    # full-width dedup shuffle + checksum pass over the original edges is
+    # skipped entirely (one less pass over the biggest dataset)
+    combined = _cut(_contract_local(raw))
+    mapping = combined.filter("kind = 0").select(
+        F.col("x").alias("id"), F.col("y").alias("root")
+    )
+    # a node seen in several partitions has several local roots; bridge
+    # them (root star per node) so the contracted graph preserves
+    # cross-partition connectivity
+    w = Window.partitionBy("id")
+    bridge = (
+        mapping.select("root", F.min("root").over(w).alias("mr"))
+        .filter(F.col("root") != F.col("mr"))
+        .select(F.col("mr").alias("a"), F.col("root").alias("b"))
+    )
+    cur = _cut(
+        combined.filter("kind = 1")
+        .select(F.col("x").alias("a"), F.col("y").alias("b"))
+        .unionByName(bridge)
+        .dropDuplicates(["a", "b"])
+    )
+    prev_sum = _edge_checksum(cur)
 
     for _ in range(max_iter):
         cur = _cut(_small_star(_large_star(cur)))
@@ -281,21 +276,20 @@ def connected_components(
     roots = cur.select(F.col("b").alias("id")).distinct().withColumn(
         "cluster_id", F.col("id")
     )
-    result = children.unionByName(roots).dropDuplicates(["id"])
-    if mapping is not None:
-        # labels were computed on local ROOTS; expand back through the
-        # mapping (a root absent from the contracted graph heads a fully
-        # partition-local component -> it is its own cluster id, and the
-        # component minimum is always a local root, so min-label semantics
-        # are preserved end to end)
-        rootlab = result.select(F.col("id").alias("root"), "cluster_id")
-        result = (
-            mapping.join(rootlab, "root", "left")
-            .select(
-                "id", F.coalesce("cluster_id", "root").alias("cluster_id")
-            )
-            .dropDuplicates(["id"])
-        )
+    # labels were computed on local ROOTS; expand back through the mapping
+    # (a root absent from the contracted graph heads a fully
+    # partition-local component -> it is its own cluster id, and the
+    # component minimum is always a local root, so min-label semantics are
+    # preserved end to end)
+    rootlab = (
+        children.unionByName(roots).dropDuplicates(["id"])
+        .select(F.col("id").alias("root"), "cluster_id")
+    )
+    result = (
+        mapping.join(rootlab, "root", "left")
+        .select("id", F.coalesce("cluster_id", "root").alias("cluster_id"))
+        .dropDuplicates(["id"])
+    )
     # hand the caller the labels as one checkpoint (eager: the union and
     # the mapping join run here, once), not as a plan over the rounds'
     # checkpoints

@@ -233,9 +233,6 @@ def minhash_band_table(
 
 # -------------------------------------------------------------------- SimHash
 
-SIMHASH_BITS = 56  # bits 0..55 of hash62 >> 4: every bit op stays in signed int64
-
-
 SIMHASH_SALT = "s2:"  # prefix for the second independent fingerprint
 
 

@@ -37,6 +37,11 @@ from ..config import SubstringConfig
 from ..functions.suffix import longest_common_substring_len
 from .candidates import candidate_pairs
 
+# fingerprints shared by more docs than this take the star defense instead
+# of all-pairs candidates (candidate_pairs); the batch operator and the
+# streaming substring pass (intra-batch and store side) share it
+HOT_FP_THRESHOLD = 64
+
 _B = 1000003  # polynomial hash base (shared by both lanes)
 # two coprime 31-bit prime moduli; the pair (h1, h2) packs into one 62-bit
 # fingerprint.  31-bit lanes keep every numpy intermediate inside int64:
@@ -352,7 +357,8 @@ def verify_lcs_pairs(
 
 def substring_pairs(
     docs: DataFrame, cfg: SubstringConfig, id_col: str = "doc_id",
-    text_col: str = "text", hot_threshold: int = 64, min_shared_fps: int = 1,
+    text_col: str = "text", hot_threshold: int = HOT_FP_THRESHOLD,
+    min_shared_fps: int = 1,
 ) -> DataFrame:
     """(id, text) -> (a, b, lcs_len) pairs with an exact common substring of
     >= cfg.min_length bytes.

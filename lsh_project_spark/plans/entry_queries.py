@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import MinHashConfig, SimHashConfig, SubstringConfig
 from ..functions.hashing import spark_hash62, duckdb_hash62
+from ..functions.textsig import SIMHASH_BITS
 from ..operators.signatures import (
-    SIMHASH_BITS,
     minhash_band_table,
     shingle_expr,
     simhash_table,

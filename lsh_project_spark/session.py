@@ -31,12 +31,30 @@ def _default_driver_mem() -> str:
     return f"{min(48 * 1024, kb * 6 // 10240)}m"
 
 
+def _launcher_conf() -> dict:
+    """The spark.* values a launcher already set for this driver.  Under
+    spark-submit the JVM starts before this process and holds its
+    ``--master``/``--conf`` values as system properties.  A plain
+    ``python`` driver has no launcher, and reading the JVM's values there
+    would start the JVM before the builder could pass it
+    ``spark.driver.memory``, so none are read."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()  # connects to the launcher's JVM
+    return dict(SparkConf().getAll())
+
+
 def get_spark(
     app: str = "lsh_project_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
+    """The engine's session.  Its settings (and ``extra``) only fill the
+    keys a launcher such as spark-submit did not set: ``spark-submit
+    --master yarn --conf spark.sql.shuffle.partitions=N`` keeps both."""
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(8, cores * 8)
     # One BLAS thread per Python worker: task-level parallelism already
@@ -46,27 +64,24 @@ def get_spark(
     # ships via spark.executorEnv.*.
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    b = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cores * 2))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.app.name": app,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.default.parallelism": str(cores * 2),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # coalesce post-shuffle partitions to data size, not to raw core
         # count — tiny stages collapse to a handful of tasks, huge stages
         # keep shuffle_partitions; without this every micro-shuffle pays
         # `shuffle_partitions` task launches
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
         # ...but never coalesce below cluster parallelism: AQE's size-based
         # coalescing happily plans 3-6 task stages on medium shuffles,
         # leaving 80% of the cluster idle in the middle of the pipeline
         # (measured: the window/gather stages ran 6-way on 16 cores)
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionNum",
-            str(cores * 2),
-        )
+        "spark.sql.adaptive.coalescePartitions.minPartitionNum": str(cores * 2),
         # small scan splits so modest local inputs still fan out across all
         # cores without an extra repartition shuffle (the Arrow profile
         # stage parallelizes over scan splits).  Each extra Python task
@@ -74,66 +89,72 @@ def get_spark(
         # under pyspark's own; trivial mapInArrow tasks, 4-core host).  At
         # warehouse scale inputs have millions of splits at any setting,
         # so there this setting adds few tasks
-        .config("spark.sql.files.maxPartitionBytes", "4m")
+        "spark.sql.files.maxPartitionBytes": "4m",
         # let AQE re-plan cached DataFrames too (the pipeline persists its
         # profile and edges; default false pins their partitioning)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # signature matmul batches: large enough to amortize Arrow transfer,
         # small enough that batch x d floats stay cache/memory friendly
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
-        )
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
+        "spark.driver.memory": (
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
+        ),
         # generous broadcast ceiling: the verify stage joins a compact pair
         # list (tens of MB at bench scale) against the array-heavy profile —
         # broadcasting the pairs spares the profile TWO full shuffles.  AQE
         # decides per-join from actual runtime sizes, so an oversized side
         # never broadcasts by accident.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(256 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.autoBroadcastJoinThreshold": str(256 * 1024 * 1024),
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
         # no inferred constraints: our plans carry explicit filters, so
         # inference adds only optimizer work on the chain's large plans
         # (perfbench tiled_sparse, 8 interleaved pairs on 4 cores: median
         # 4% slower with it on)
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
-    )
-    extra = dict(extra or {})
-    if extra.get("spark.master", "local").startswith("local"):
+        "spark.sql.constraintPropagation.enabled": "false",
+        "spark.executorEnv.OMP_NUM_THREADS": "1",
+        "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
+        "spark.executorEnv.MKL_NUM_THREADS": "1",
+        # reliable RDD checkpoints for iterative operators (connected
+        # components): measured ~2x on 50M-edge CC vs localCheckpoint, whose
+        # deserialized heap blocks turn half the task time into GC.  A
+        # cluster deployment points this at HDFS/S3; GC'd RDDs' checkpoint
+        # files are cleaned eagerly.
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        **(extra or {}),
+    }
+    launcher = _launcher_conf()
+    conf = {k: v for k, v in conf.items() if k not in launcher}
+    if launcher.get("spark.master", conf.get("spark.master", "")).startswith("local"):
         # Python workers fork from worker_daemon, which stops each task's
         # importlib.invalidate_caches() from re-reading every zip on the
         # worker's path (~0.3 s of worker CPU per task; see its docstring).
         # The daemon starts before any --py-files zip reaches the worker's
         # path, so the entry the driver imported this package from goes on
-        # the workers' PYTHONPATH, ahead of any caller value.  Local masters
-        # only: there the driver's path entry is valid on the workers.
-        theirs = extra.get(_EXECUTOR_PYTHONPATH, "").split(os.pathsep)
-        extra[_EXECUTOR_PYTHONPATH] = os.pathsep.join(
+        # the workers' PYTHONPATH, ahead of the launcher's or caller's
+        # value.  Local masters only: there the driver's path entry is
+        # valid on the workers.
+        theirs = (
+            launcher.get(_EXECUTOR_PYTHONPATH) or conf.get(_EXECUTOR_PYTHONPATH, "")
+        ).split(os.pathsep)
+        conf[_EXECUTOR_PYTHONPATH] = os.pathsep.join(
             [_PATH_ENTRY] + [p for p in theirs if p and p != _PATH_ENTRY]
         )
-        b = b.config("spark.python.daemon.module", "lsh_project_spark.worker_daemon")
-    for k, v in extra.items():
+        if "spark.python.daemon.module" not in launcher:
+            conf["spark.python.daemon.module"] = "lsh_project_spark.worker_daemon"
+    b = SparkSession.builder
+    for k, v in conf.items():
         b = b.config(k, v)
-    # reliable RDD checkpoints for iterative operators (connected
-    # components, substring cells): measured ~2x on 50M-edge CC vs
-    # localCheckpoint, whose deserialized heap blocks turn half the task
-    # time into GC.  A cluster deployment points this at HDFS/S3; GC'd
-    # RDDs' checkpoint files are cleaned eagerly.
-    b = b.config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     spark = b.getOrCreate()
     sc = spark.sparkContext
     # Default the reliable-checkpoint dir ONLY in local mode: a
     # driver-local tempdir is a valid checkpoint target only when driver
     # and executors share one filesystem.  On a real cluster (non-local
-    # master) executors would write disjoint local paths and iterative
-    # CC/substring checkpoints would corrupt — there the deployment must
-    # set a shared dir (HDFS/S3) itself, and the operators' localCheckpoint
+    # master) executors would write disjoint local paths and iterative CC
+    # checkpoints would corrupt — there the deployment must set a shared
+    # dir (HDFS/S3) itself, and connected_components' localCheckpoint
     # fallback covers the unset case.
     if sc.master.startswith("local") and not (
         sc._jsc.sc().getCheckpointDir().isDefined()

@@ -6,7 +6,7 @@ then joined against the accumulated signature store:
 
   new rows ──mapInPandas(profile)──► new signatures
   new sigs ⋈ store sigs (equi-join on modality/band/bucket) ──► candidates
-  candidates ──exact verify──► new verified pairs  (appended)
+  candidates ──exact verify──► new verified pairs  (committed)
   new profile rows appended to the store
 
 ``foreachBatch`` is the right tool here (not a stateful operator): the
@@ -31,24 +31,27 @@ Store layout (the 100 TB shape):
   per-batch handful), again scan-pruned and broadcast-joined.
 - substring modality (cfg.substring_enabled): a winnowed-fingerprint store
   partitioned by ``pfp = pmod(xxhash64(fp), P)`` and a caption store by
-  ``pid`` — new captions winnow once, pair against the fp store with the
-  same pruned-scan + broadcast join, and the exact LCS verify fetches only
-  the candidate ids' captions.
+  ``pid`` — new captions winnow once, pair against the fp store through
+  the same new-vs-store pairing as the signatures (``_pairs_with_store``),
+  and the exact LCS verify fetches only the candidate ids' captions.
 - every ``compact_every`` batches each store is rewritten (one file per
   partition, duplicates dropped) so the per-partition file count — and
   with it planning/open cost — stays bounded as batches accumulate.
-- optional snapshot sink (``pairs_table_root``): verified pairs are
-  committed per micro-batch as APPEND snapshots of a versioned table
-  (table.py) — O(new pairs) per commit, batch-id-stamped for exactly-once
-  under foreachBatch retries, time travel to any micro-batch boundary.
+- pairs sink: verified pairs are committed per micro-batch as APPEND
+  snapshots of a versioned table (table.py, rooted at
+  ``state_dir/verified_pairs`` unless ``pairs_table_root`` moves it) —
+  O(new pairs) per commit, batch-id-stamped for exactly-once under
+  foreachBatch retries, time travel to any micro-batch boundary.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..config import PipelineConfig
 from ..operators.candidates import candidate_pairs
@@ -57,11 +60,17 @@ from ..operators.profile import (
     profile_signatures,
     verify_pairs_from_profile,
 )
+from ..operators.substring import (
+    HOT_FP_THRESHOLD,
+    verify_lcs_pairs,
+    winnowed_fingerprints,
+)
+from ..table import SnapshotTable
 
-# hot-fingerprint threshold for the substring modality (intra-batch star
-# defense AND the store-side cap below share it, so streaming matches the
-# batch substring_pairs skew defense)
-_FP_HOT = 64
+
+def _exists(path: str) -> bool:
+    """True once a Spark write to ``path`` has completed."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def _cap_per_bucket(
@@ -81,8 +90,6 @@ def _cap_per_bucket(
     to ``cap`` stored members per bucket, keeping component connectivity
     through the store's existing edges); exact verify follows, so no false
     positives."""
-    from pyspark.sql import Window
-
     per_salt = -(-cap // salt)
     w1 = Window.partitionBy(*bucket_cols, "_s").orderBy(id_col)
     w2 = Window.partitionBy(*bucket_cols).orderBy(id_col)
@@ -113,23 +120,20 @@ class IncrementalDedup:
         self.state_dir = state_dir
         self.P = num_store_partitions
         self.compact_every = compact_every
-        # optional snapshot-versioned sink for the verified pairs: one
-        # APPEND commit per micro-batch (manifest references prior delta
-        # dirs, so commit cost is O(new pairs)), batch-id-stamped so a
-        # foreachBatch retry cannot double-append — the Iceberg streaming
-        # -sink contract (table.py commit_append).  Readers get time
-        # travel across micro-batches for free.
-        self.pairs_table = None
-        if pairs_table_root is not None:
-            from ..table import SnapshotTable
-
-            self.pairs_table = SnapshotTable(spark, pairs_table_root)
+        # snapshot-versioned sink for the verified pairs: one APPEND commit
+        # per micro-batch (manifest references prior delta dirs, so commit
+        # cost is O(new pairs)), batch-id-stamped so a foreachBatch retry
+        # cannot double-append — the Iceberg streaming-sink contract
+        # (table.py commit_append).  Readers get time travel across
+        # micro-batches for free.
+        self.pairs_table = SnapshotTable(
+            spark, pairs_table_root or os.path.join(state_dir, "verified_pairs")
+        )
         self._batches_since_compact = 0
         self.store_path = os.path.join(state_dir, "profile_store")
         self.sig_store_path = os.path.join(state_dir, "sig_store")
         self.fp_store_path = os.path.join(state_dir, "fp_store")
         self.caption_store_path = os.path.join(state_dir, "caption_store")
-        self.pairs_path = os.path.join(state_dir, "verified_pairs")
         self.assign_store_path = os.path.join(state_dir, "assign_store")
         self.remap_path = os.path.join(state_dir, "cluster_remap.json")
         os.makedirs(state_dir, exist_ok=True)
@@ -139,7 +143,7 @@ class IncrementalDedup:
 
     @staticmethod
     def _recover_compaction(path: str) -> None:
-        """Make the compaction swap crash-safe: _compact_one renames
+        """Make the compaction swap crash-safe: _rewrite renames
         path -> path_old then path_compacting -> path, so a crash between
         the renames leaves the store ABSENT — without recovery the stream
         would restart from empty state (silently wrong dedup results).
@@ -148,11 +152,9 @@ class IncrementalDedup:
         (os.rename semantics = local/POSIX filesystem; on an object store
         this layer would flip a manifest pointer instead — the pattern the
         snapshot table layer (table.py) implements.)"""
-        import shutil
-
         tmp, old = path + "_compacting", path + "_old"
         if not os.path.exists(path):
-            if os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            if _exists(tmp):
                 os.rename(tmp, path)
             elif os.path.exists(old):
                 os.rename(old, path)
@@ -161,40 +163,83 @@ class IncrementalDedup:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
 
-    def _store_exists(self) -> bool:
-        return os.path.exists(os.path.join(self.store_path, "_SUCCESS"))
-
     # ---------------------------------------------------------------- state
 
-    def _with_pid(self, profile: DataFrame) -> DataFrame:
-        return profile.withColumn(
-            "pid", F.pmod(F.xxhash64("image_id"), F.lit(self.P))
-        )
+    def _part(self, *cols: str):
+        """Store partition of a row: ``pmod(xxhash64(cols), P)``."""
+        return F.pmod(F.xxhash64(*cols), F.lit(self.P))
 
-    def _with_pbucket(self, sigs: DataFrame) -> DataFrame:
-        return sigs.withColumn(
-            "pbucket", F.pmod(F.xxhash64("modality", "band", "bucket"), F.lit(self.P))
-        )
-
-    def _read_profiles_for(self, ids: DataFrame) -> DataFrame:
-        """Store profiles for the given (image_id) set: partition-pruned
-        scan + broadcast semi-join (the store never shuffles)."""
+    def _read_for(self, path: str, ids: DataFrame) -> DataFrame:
+        """Rows of the pid-partitioned store at ``path`` for the given
+        (image_id) set: partition-pruned scan + broadcast semi-join (the
+        store never shuffles)."""
         pids = [
             r["pid"]
-            for r in ids.select(
-                F.pmod(F.xxhash64("image_id"), F.lit(self.P)).alias("pid")
-            ).distinct().collect()
+            for r in ids.select(self._part("image_id").alias("pid"))
+            .distinct().collect()
         ]
-        store = self.spark.read.parquet(self.store_path).filter(
-            F.col("pid").isin(pids)
-        )
+        store = self.spark.read.parquet(path).filter(F.col("pid").isin(pids))
         return store.join(F.broadcast(ids), "image_id", "left_semi").drop("pid")
+
+    def _with_stored(
+        self, path: str, cands: DataFrame, new_rows: DataFrame
+    ) -> DataFrame:
+        """``new_rows`` plus the rows the store at ``path`` holds for the
+        candidates' ids: the verify side of a new-vs-store pairing."""
+        if not _exists(path):
+            return new_rows
+        ids = (
+            cands.select(F.col("a").alias("image_id"))
+            .unionByName(cands.select(F.col("b").alias("image_id")))
+            .distinct()
+        )
+        return self._read_for(path, ids).unionByName(new_rows)
+
+    def _pairs_with_store(
+        self, new: DataFrame, path: str, part_col: str,
+        keys: tuple[str, ...], cap: int,
+    ) -> DataFrame:
+        """Distinct (a, b) candidate pairs, a < b, of the new rows
+        (image_id, *keys, part_col) against each other AND against the
+        store at ``path``.
+
+        Intra-batch pairs go through the SAME salted/star-defended
+        ``candidate_pairs`` as the batch pipeline, so a degenerate bucket
+        inside one micro-batch is bounded exactly like anywhere else.
+        New-vs-store pairs read ONLY the store partitions the new rows'
+        keys hash into (exact pruning — equal keys imply equal
+        ``part_col``), cap the pruned subset per bucket (skew defense) and
+        broadcast the new side.  Only the pruned per-batch subset ever
+        shuffles (for the cap's ranking) — never the store as a whole."""
+        intra = candidate_pairs(
+            new, id_col="image_id", bucket_cols=keys, hot_bucket_threshold=cap
+        )
+        if not _exists(path):
+            return intra
+        hit = [r[part_col] for r in new.select(part_col).distinct().collect()]
+        stored = _cap_per_bucket(
+            self.spark.read.parquet(path).filter(F.col(part_col).isin(hit)),
+            keys, cap,
+        )
+        cross = (
+            stored.select(*keys, F.col("image_id").alias("a"))
+            .join(
+                F.broadcast(new.select(*keys, F.col("image_id").alias("b"))),
+                list(keys),
+            )
+            .filter(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        )
+        return cross.unionByName(intra).dropDuplicates(["a", "b"])
 
     # ---------------------------------------------------------------- batch
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body: profile the new rows, pair them against the
-        store AND against each other, verify, append state."""
+        stores AND against each other, verify, commit the pairs, append
+        state.  With the substring modality on, the new captions' winnowed
+        fingerprints take the same pairing and the exact diagonal-run LCS
+        verify, and the survivors are OR-unioned into the pairs."""
         cfg = self.cfg
         # every DataFrame this batch persists is unpersisted when it ends,
         # whether it returns or raises
@@ -210,94 +255,48 @@ class IncrementalDedup:
             ))
             if new_profile.isEmpty():
                 return
-            new_sigs = cache(self._with_pbucket(profile_signatures(new_profile, cfg)))
-
-            # intra-batch candidates go through the SAME salted/star-defended
-            # path as the batch pipeline, so a degenerate bucket inside one
-            # micro-batch is bounded exactly like anywhere else (round-3 fix:
-            # this was the one candidate generator bypassing the defense)
-            intra = candidate_pairs(
-                new_sigs,
-                bucket_cols=("modality", "band", "bucket"),
-                hot_bucket_threshold=cfg.hot_bucket_threshold,
+            new_sigs = cache(profile_signatures(new_profile, cfg).withColumn(
+                "pbucket", self._part("modality", "band", "bucket")
+            ))
+            cands = cache(self._pairs_with_store(
+                new_sigs, self.sig_store_path, "pbucket",
+                ("modality", "band", "bucket"), cfg.hot_bucket_threshold,
+            ))
+            pairs = verify_pairs_from_profile(
+                cands, self._with_stored(self.store_path, cands, new_profile), cfg
             )
-
-            if self._store_exists():
-                # new-vs-store: read ONLY the store partitions the new batch's
-                # buckets hash into (exact pruning — equal (modality, band,
-                # bucket) implies equal pbucket), cap the pruned subset per
-                # bucket (skew defense), broadcast the new side.  Only the
-                # pruned per-batch subset ever shuffles (for the cap's ranking)
-                # — never the store as a whole.
-                hit = [
-                    r["pbucket"]
-                    for r in new_sigs.select("pbucket").distinct().collect()
-                ]
-                store_sigs = _cap_per_bucket(
-                    self.spark.read.parquet(self.sig_store_path).filter(
-                        F.col("pbucket").isin(hit)
-                    ),
-                    ("modality", "band", "bucket"),
-                    cfg.hot_bucket_threshold,
-                )
-                cross = (
-                    store_sigs.select(
-                        "modality", "band", "bucket", F.col("image_id").alias("a")
-                    )
-                    .join(
-                        F.broadcast(
-                            new_sigs.select(
-                                "modality", "band", "bucket",
-                                F.col("image_id").alias("b"),
-                            )
-                        ),
-                        ["modality", "band", "bucket"],
-                    )
-                    .filter(F.col("a") != F.col("b"))
-                    .select(
-                        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-                    )
-                )
-                cands = cache(cross.unionByName(intra).dropDuplicates(["a", "b"]))
-                cand_ids = (
-                    cands.select(F.col("a").alias("image_id"))
-                    .unionByName(cands.select(F.col("b").alias("image_id")))
-                    .distinct()
-                )
-                all_profile = self._read_profiles_for(cand_ids).unionByName(new_profile)
-            else:
-                cands = cache(intra.dropDuplicates(["a", "b"]))
-                all_profile = new_profile
-
-            pairs = verify_pairs_from_profile(cands, all_profile, cfg)
-            new_fps = None
+            texts = batch_df.select("image_id", F.col("caption").alias("text"))
             if cfg.substring_enabled:
-                pairs, new_fps = self._substring_batch(batch_df, pairs, cache)
-            pairs = cache(pairs)
-            if self.pairs_table is not None:
-                self.pairs_table.commit_append(
-                    pairs, note=f"micro-batch {batch_id}", batch_id=batch_id
+                new_fps = cache(winnowed_fingerprints(
+                    texts, cfg.substring, id_col="image_id", text_col="text"
+                ).withColumn("pfp", self._part("fp")))
+                sub_cands = self._pairs_with_store(
+                    new_fps, self.fp_store_path, "pfp", ("fp",), HOT_FP_THRESHOLD
                 )
-            else:
-                pairs.write.mode("append").parquet(self.pairs_path)
-            self._update_assignments(
-                new_profile.select("image_id"), pairs
+                survivors = verify_lcs_pairs(
+                    sub_cands,
+                    self._with_stored(self.caption_store_path, sub_cands, texts),
+                    cfg.substring.min_length, id_col="image_id", text_col="text",
+                )
+                pairs = pairs.unionByName(survivors.select("a", "b"))
+            pairs = cache(pairs)
+            self.pairs_table.commit_append(
+                pairs, note=f"micro-batch {batch_id}", batch_id=batch_id
             )
+            self._update_assignments(new_profile.select("image_id"), pairs)
             new_sigs.write.mode("append").partitionBy("pbucket").parquet(
                 self.sig_store_path
             )
-            self._with_pid(new_profile).write.mode("append").partitionBy("pid").parquet(
-                self.store_path
-            )
-            if new_fps is not None:
+            new_profile.withColumn("pid", self._part("image_id")).write.mode(
+                "append"
+            ).partitionBy("pid").parquet(self.store_path)
+            if cfg.substring_enabled:
                 new_fps.write.mode("append").partitionBy("pfp").parquet(
                     self.fp_store_path
                 )
-                self._with_pid(
-                    batch_df.select("image_id", F.col("caption").alias("text"))
-                ).write.mode("append").partitionBy("pid").parquet(
-                    self.caption_store_path
-                )
+                texts.withColumn("pid", self._part("image_id")).write.mode(
+                    "append"
+                ).partitionBy("pid").parquet(self.caption_store_path)
         finally:
             for df in caches:
                 df.unpersist()
@@ -305,82 +304,9 @@ class IncrementalDedup:
         if self._batches_since_compact >= self.compact_every:
             self.compact()
 
-    # ---------------------------------------------------- substring modality
-
-    def _read_captions_for(self, ids: DataFrame) -> DataFrame:
-        """Stored captions for the given image_ids: partition-pruned scan +
-        broadcast semi-join, same pattern as _read_profiles_for."""
-        pids = [
-            r["pid"]
-            for r in ids.select(
-                F.pmod(F.xxhash64("image_id"), F.lit(self.P)).alias("pid")
-            ).distinct().collect()
-        ]
-        store = self.spark.read.parquet(self.caption_store_path).filter(
-            F.col("pid").isin(pids)
-        )
-        return store.join(F.broadcast(ids), "image_id", "left_semi").drop("pid")
-
-    def _substring_batch(self, batch_df: DataFrame, pairs: DataFrame, cache):
-        """Substring modality, incrementally: winnow the new captions, pair
-        them against the accumulated fingerprint store (partition-pruned,
-        broadcast-joined — mirroring the signature path) and against each
-        other (through the salted hot-bucket defense), verify with the
-        exact diagonal-run LCS, and OR-union the survivors."""
-        from ..operators.substring import verify_lcs_pairs, winnowed_fingerprints
-
-        cfg = self.cfg
-        texts_new = batch_df.select("image_id", F.col("caption").alias("text"))
-        new_fps = cache(winnowed_fingerprints(
-            texts_new, cfg.substring, id_col="image_id", text_col="text"
-        ).withColumn("pfp", F.pmod(F.xxhash64("fp"), F.lit(self.P))))
-        sub_cands = candidate_pairs(
-            new_fps, id_col="image_id", bucket_cols=("fp",),
-            hot_bucket_threshold=_FP_HOT,
-        )
-        have_store = os.path.exists(
-            os.path.join(self.fp_store_path, "_SUCCESS")
-        )
-        if have_store:
-            hit = [r["pfp"] for r in new_fps.select("pfp").distinct().collect()]
-            store_fps = _cap_per_bucket(
-                self.spark.read.parquet(self.fp_store_path).filter(
-                    F.col("pfp").isin(hit)
-                ),
-                ("fp",),
-                _FP_HOT,
-            )
-            cross = (
-                store_fps.select("fp", F.col("image_id").alias("a"))
-                .join(
-                    F.broadcast(new_fps.select("fp", F.col("image_id").alias("b"))),
-                    "fp",
-                )
-                .filter(F.col("a") != F.col("b"))
-                .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            )
-            sub_cands = sub_cands.unionByName(cross).dropDuplicates(["a", "b"])
-        sub_ids = (
-            sub_cands.select(F.col("a").alias("image_id"))
-            .unionByName(sub_cands.select(F.col("b").alias("image_id")))
-            .distinct()
-        )
-        texts_all = texts_new
-        if have_store:
-            texts_all = texts_all.unionByName(
-                self._read_captions_for(sub_ids)
-            ).dropDuplicates(["image_id"])
-        survivors = verify_lcs_pairs(
-            sub_cands, texts_all, cfg.substring.min_length,
-            id_col="image_id", text_col="text",
-        ).select("a", "b")
-        return pairs.unionByName(survivors), new_fps
-
     # ----------------------------------------- incremental cluster maintenance
 
     def _load_remap(self) -> dict:
-        import json
-
         if not os.path.exists(self.remap_path):
             return {}
         with open(self.remap_path) as f:
@@ -388,12 +314,26 @@ class IncrementalDedup:
             return dict(map(tuple, json.load(f)))
 
     def _save_remap(self, remap: dict) -> None:
-        import json
-
         tmp = self.remap_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump([[k, v] for k, v in remap.items()], f)
         os.replace(tmp, self.remap_path)
+
+    def _resolved(self, store: DataFrame) -> DataFrame:
+        """``store`` with each ``cluster_id`` resolved through the cluster
+        remap (a broadcast join; the remap is kept fully flattened, so one
+        lookup lands on the root)."""
+        remap = self._load_remap()
+        if not remap:
+            return store
+        id_type = dict(store.dtypes)["cluster_id"]
+        rdf = self.spark.createDataFrame(
+            list(remap.items()), f"cluster_id {id_type}, _root {id_type}"
+        )
+        label = F.coalesce("_root", "cluster_id").alias("cluster_id")
+        return store.join(F.broadcast(rdf), "cluster_id", "left").select(
+            *(label if c == "cluster_id" else c for c in store.columns)
+        )
 
     def _update_assignments(self, new_ids_df: DataFrame, pairs: DataFrame) -> None:
         """Per-micro-batch cluster maintenance (round-4 verdict #4): keep an
@@ -420,9 +360,6 @@ class IncrementalDedup:
         # .tolist() yields native Python ids (numpy scalars break JSON)
         pair_a, pair_b = ppdf["a"].tolist(), ppdf["b"].tolist()
         touched = set(new_ids) | set(pair_a) | set(pair_b)
-        have_store = os.path.exists(
-            os.path.join(self.assign_store_path, "_SUCCESS")
-        )
         id_type = dict(new_ids_df.dtypes)["image_id"]
         prior: dict = {}
         # look up ALL touched ids, including this batch's new_ids: an id can
@@ -430,22 +367,11 @@ class IncrementalDedup:
         # stored cluster root — excluding new_ids here (the round-5 bug) made
         # re-arrivals look fresh, appending a second conflicting store row
         # seeded from the id itself instead of its stored label
-        if have_store and touched:
+        if touched and _exists(self.assign_store_path):
             ids_df = self.spark.createDataFrame(
                 [(i,) for i in touched], f"image_id {id_type}"
             )
-            pids = [
-                r["pid"] for r in ids_df.select(
-                    F.pmod(F.xxhash64("image_id"), F.lit(self.P)).alias("pid")
-                ).distinct().collect()
-            ]
-            rows = (
-                self.spark.read.parquet(self.assign_store_path)
-                .filter(F.col("pid").isin(pids))
-                .join(F.broadcast(ids_df), "image_id", "left_semi")
-                .select("image_id", "cluster_id")
-                .collect()
-            )
+            rows = self._read_for(self.assign_store_path, ids_df).collect()
             prior = {r["image_id"]: r["cluster_id"] for r in rows}
 
         remap = self._load_remap()
@@ -491,78 +417,49 @@ class IncrementalDedup:
                 [(i, find(base[i])) for i in fresh],
                 f"image_id {id_type}, cluster_id {id_type}",
             )
-            out.withColumn(
-                "pid", F.pmod(F.xxhash64("image_id"), F.lit(self.P))
-            ).write.mode("append").partitionBy("pid").parquet(
-                self.assign_store_path
-            )
+            out.withColumn("pid", self._part("image_id")).write.mode(
+                "append"
+            ).partitionBy("pid").parquet(self.assign_store_path)
 
     # ----------------------------------------------------------- compaction
 
-    def _compact_one(self, path: str, part_col: str, dedup_cols: list[str]) -> None:
-        tmp = path + "_compacting"
-        (
-            self.spark.read.parquet(path)
-            .dropDuplicates(dedup_cols)
-            .repartition(part_col)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(tmp)
-        )
-        import shutil
-
-        old = path + "_old"
+    def _rewrite(self, path: str, df: DataFrame, part_col: str) -> None:
+        """Replace the store at ``path`` with ``df``, one file per
+        ``part_col`` partition: write it aside, then swap by two renames
+        (_recover_compaction completes a swap a crash interrupted)."""
+        tmp, old = path + "_compacting", path + "_old"
+        df.repartition(part_col).write.mode("overwrite").partitionBy(
+            part_col
+        ).parquet(tmp)
         os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old)
 
     def compact(self) -> None:
-        """Rewrite both stores as one file per partition with duplicates
+        """Rewrite every store as one file per partition with duplicates
         dropped, bounding per-partition file counts (and with them the
         per-batch planning/open cost) as micro-batches accumulate."""
-        if self._store_exists():
-            self._compact_one(
-                self.sig_store_path, "pbucket",
-                ["modality", "band", "bucket", "image_id"],
-            )
-            self._compact_one(self.store_path, "pid", ["image_id"])
-        if os.path.exists(os.path.join(self.fp_store_path, "_SUCCESS")):
-            self._compact_one(self.fp_store_path, "pfp", ["image_id", "fp"])
-            self._compact_one(self.caption_store_path, "pid", ["image_id"])
-        if os.path.exists(os.path.join(self.assign_store_path, "_SUCCESS")):
+        for path, part_col, key in (
+            (self.sig_store_path, "pbucket", ["modality", "band", "bucket", "image_id"]),
+            (self.store_path, "pid", ["image_id"]),
+            (self.fp_store_path, "pfp", ["image_id", "fp"]),
+            (self.caption_store_path, "pid", ["image_id"]),
+        ):
+            if _exists(path):
+                self._rewrite(
+                    path, self.spark.read.parquet(path).dropDuplicates(key), part_col
+                )
+        if _exists(self.assign_store_path):
             # fold the cluster remap into the stored labels, then clear it
             # (keeps the broadcast side at read time permanently small)
-            remap = self._load_remap()
-            if remap:
-                id_type = dict(
-                    self.spark.read.parquet(self.assign_store_path).dtypes
-                )["cluster_id"]
-                rdf = self.spark.createDataFrame(
-                    list(remap.items()), f"cluster_id {id_type}, _root {id_type}"
-                )
-                tmp = self.assign_store_path + "_compacting"
-                (
-                    self.spark.read.parquet(self.assign_store_path)
-                    .join(F.broadcast(rdf), "cluster_id", "left")
-                    .select(
-                        "image_id",
-                        F.coalesce("_root", "cluster_id").alias("cluster_id"),
-                        "pid",
-                    )
-                    .dropDuplicates(["image_id"])
-                    .repartition("pid")
-                    .write.mode("overwrite").partitionBy("pid").parquet(tmp)
-                )
-                import shutil
-
-                old = self.assign_store_path + "_old"
-                os.rename(self.assign_store_path, old)
-                os.rename(tmp, self.assign_store_path)
-                shutil.rmtree(old)
-                self._save_remap({})
-            else:
-                self._compact_one(self.assign_store_path, "pid", ["image_id"])
-        if self.pairs_table is not None and self.pairs_table.current_id():
+            self._rewrite(
+                self.assign_store_path,
+                self._resolved(self.spark.read.parquet(self.assign_store_path))
+                .dropDuplicates(["image_id"]),
+                "pid",
+            )
+            self._save_remap({})
+        if self.pairs_table.current_id():
             # collapse the per-batch append chain (read fan-in grows one
             # dir per micro-batch otherwise); history stays time-travelable
             # and commit_append's monotone batch-id skip keeps retries
@@ -588,41 +485,18 @@ class IncrementalDedup:
         return writer.start()
 
     def verified_pairs(self, snapshot_id: int | None = None) -> DataFrame:
-        """All verified pairs; with the snapshot sink enabled,
-        ``snapshot_id`` time-travels to the pairs as of that micro-batch's
-        commit."""
-        if self.pairs_table is not None:
-            df = self.pairs_table.read(snapshot_id)
-        else:
-            df = self.spark.read.parquet(self.pairs_path)
-        return df.dropDuplicates(["a", "b"])
+        """All verified pairs; ``snapshot_id`` time-travels to the pairs as
+        of that micro-batch's commit."""
+        return self.pairs_table.read(snapshot_id).dropDuplicates(["a", "b"])
 
     def assignments(self) -> DataFrame:
         """Current cluster assignments from the incrementally-maintained
         store: stored labels resolved through the (broadcast) cluster
-        remap — no CC recompute over accumulated pairs.  Falls back to
-        batch CC for state dirs written before the assignment store
-        existed."""
-        if not os.path.exists(os.path.join(self.assign_store_path, "_SUCCESS")):
-            return self.assignments_recomputed()
-        store = (
-            self.spark.read.parquet(self.assign_store_path)
-            .select("image_id", "cluster_id")
+        remap — no CC recompute over accumulated pairs."""
+        store = self.spark.read.parquet(self.assign_store_path).select(
+            "image_id", "cluster_id"
         )
-        remap = self._load_remap()
-        if remap:
-            id_type = dict(store.dtypes)["cluster_id"]
-            rdf = self.spark.createDataFrame(
-                list(remap.items()), f"cluster_id {id_type}, _root {id_type}"
-            )
-            store = (
-                store.join(F.broadcast(rdf), "cluster_id", "left")
-                .select(
-                    "image_id",
-                    F.coalesce("_root", "cluster_id").alias("cluster_id"),
-                )
-            )
-        return store.dropDuplicates(["image_id"])
+        return self._resolved(store).dropDuplicates(["image_id"])
 
     def assignments_recomputed(self) -> DataFrame:
         """Batch CC over all accumulated verified pairs (the full-recompute

@@ -14,19 +14,14 @@ def _random_graph(seed, n, m):
 
 
 @pytest.mark.parametrize("seed,n,m", [(1, 50, 30), (2, 200, 150), (3, 500, 700)])
-@pytest.mark.parametrize(
-    "driver_max,contract",
-    [(5_000_000, True), (0, True), (0, False)],
-)  # fast path / distributed+contraction / pure star loop
-def test_cc_matches_union_find(spark, seed, n, m, driver_max, contract):
+@pytest.mark.parametrize("driver_max", [5_000_000, 0])  # fast path / distributed
+def test_cc_matches_union_find(spark, seed, n, m, driver_max):
     nodes, edges = _random_graph(seed, n, m)
     oracle = union_find_clusters(nodes, edges)
     edf = spark.createDataFrame(edges, "a long, b long")
     got = {
         r["id"]: r["cluster_id"]
-        for r in connected_components(
-            edf, driver_max_edges=driver_max, contract=contract
-        ).collect()
+        for r in connected_components(edf, driver_max_edges=driver_max).collect()
     }
     for node, cid in got.items():
         assert oracle[node] == cid, node
@@ -70,12 +65,15 @@ def test_cc_chain_graph(spark, driver_max):
 
 
 def test_cc_raises_when_it_does_not_converge(spark):
-    """A 64-node path needs several large-star/small-star rounds; capping
-    the distributed loop at one must raise, not return partial labels."""
-    edges = [(i, i + 1) for i in range(63)]
+    """A 2,000-node path keeps nearly all its nodes through the
+    partition-local contraction (its edges hash over >= 64 partitions, so
+    few neighbouring edges share one), and one large-star/small-star round
+    cannot collapse that long a path; capping the distributed loop at one
+    must raise, not return partial labels."""
+    edges = [(i, i + 1) for i in range(1999)]
     edf = spark.createDataFrame(edges, "a long, b long")
     with pytest.raises(RuntimeError, match="max_iter=1"):
-        connected_components(edf, driver_max_edges=0, contract=False, max_iter=1)
+        connected_components(edf, driver_max_edges=0, max_iter=1)
 
 
 def test_cc_string_ids(spark):

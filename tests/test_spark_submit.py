@@ -73,3 +73,45 @@ def test_spark_submit_pyfiles_end_to_end(spark, packaged, tmp_path):
     assert got == want  # packaged run == in-process run, bit-for-bit
     m = json.load(open(metrics))
     assert m["rows"] == len(want)
+
+
+def test_spark_submit_settings_win_over_get_spark(tmp_path):
+    """`spark-submit --master/--conf` values reach the session: get_spark
+    fills only the keys the launcher left unset, and the Python-worker
+    daemon follows the master in effect (local here)."""
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "import json\n"
+        "from lsh_project_spark.session import get_spark\n"
+        "spark = get_spark()\n"
+        "sc = spark.sparkContext\n"
+        "assert sc.range(8, numSlices=2).map(lambda x: x * 2).sum() == 56\n"
+        "print('PROBE ' + json.dumps({\n"
+        "    'master': sc.master,\n"
+        "    'shuffle': spark.conf.get('spark.sql.shuffle.partitions'),\n"
+        "    'aqe': spark.conf.get('spark.sql.adaptive.enabled'),\n"
+        "    'daemon': sc.getConf().get('spark.python.daemon.module'),\n"
+        "}))\n"
+        "spark.stop()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_CPUS="3",
+               PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [
+            "spark-submit",
+            "--master", "local[2]",
+            "--conf", "spark.sql.shuffle.partitions=7",
+            "--conf", "spark.ui.enabled=false",
+            str(script),
+        ],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path), env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = next(ln for ln in proc.stdout.splitlines() if ln.startswith("PROBE "))
+    assert json.loads(line[len("PROBE "):]) == {
+        "master": "local[2]",
+        "shuffle": "7",
+        "aqe": "true",
+        "daemon": "lsh_project_spark.worker_daemon",
+    }

@@ -475,3 +475,29 @@ def test_failed_batch_leaves_no_cache(spark, tmp_path, monkeypatch):
     with pytest.raises(Boom):
         inc.process_batch(images, 0)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_default_sink_skips_a_replayed_batch(spark, tmp_path):
+    """The default constructor commits pairs to the snapshot table under
+    ``state_dir/verified_pairs``: replaying a micro-batch whose batch id is
+    already committed (a foreachBatch retry) adds no pairs snapshot and
+    leaves verified_pairs() unchanged."""
+    import os
+
+    images = images_table(spark, num_clusters=6, seed=5).cache()
+    images.count()
+    state = str(tmp_path / "state")
+    inc = IncrementalDedup(spark, state)
+    assert inc.pairs_table.root == os.path.join(state, "verified_pairs")
+    part = F.pmod(F.xxhash64("image_id"), F.lit(2))
+    batches = [images.filter(part == b) for b in (0, 1)]
+    for b, df in enumerate(batches):
+        inc.process_batch(df, b)
+    snaps = inc.pairs_table.snapshots()
+    assert [s["batch_id"] for s in snaps] == [0, 1]
+    before = {(r["a"], r["b"]) for r in inc.verified_pairs().collect()}
+    assert before
+
+    inc.process_batch(batches[1], 1)
+    assert inc.pairs_table.snapshots() == snaps
+    assert {(r["a"], r["b"]) for r in inc.verified_pairs().collect()} == before
