@@ -8,19 +8,20 @@ Shape (classic IVF-Flat, cf. Jégou et al. '11 / FAISS):
    Lloyd iterations on a BOUNDED, hash-selected sample (the quantizer is
    a pretrained artifact, fit once on ~64k rows no matter the corpus
    size — never a corpus-wide iterative job).
-2. **Assign** every corpus vector to its nearest centroid with one pure
-   JVM fold expression (a projection: NO shuffle; at 100 TB the list id
-   becomes the table's bucket/partition column, so probing prunes
-   partitions instead of scanning).
+2. **Assign** every corpus vector to its nearest centroid in one numpy
+   map stage (a projection: NO shuffle; at 100 TB the list id becomes
+   the table's bucket/partition column, so probing prunes partitions
+   instead of scanning).
 3. **Probe**: each query ranks centroids, takes the ``nprobe`` nearest
-   lists, and exact-reranks only those lists' members — per-query cost
+   lists, and exact-reranks only those lists' members with the shared
+   cosine scorer and top-k of operators/similarity.py — per-query cost
    tracks ``nprobe / n_lists`` of the corpus, not n².
 
-Everything is engine-portable: centroids are quantized to 6 decimals and
-emitted as string->double CAST literals, all dot products are sequential
-left-to-right double folds, and ties break on the lower index — so a
-DuckDB oracle reproduces assignments, probe sets, and final rankings
-bit-exactly (same discipline as ann_topk_portable / cp_multiprobe).
+Everything is engine-portable: centroids are quantized to 6 decimals
+(the oracle renders them as string->double CAST literals), centroid
+scores and cosines are sequential left-to-right double folds, and ties
+break on the lower index — so a DuckDB oracle reproduces assignments,
+probe sets, and final rankings bit-exactly (as for brute_force_topk).
 
 No reference analog (the reference is pure LSH: src/lsh.c); IVF is the
 standard alternative scale path the task brief names.
@@ -30,9 +31,10 @@ from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from ..functions.hashing import spark_hash62
+from .similarity import cosine_scores, cosine_topk
 
 IVF_QUANT_DECIMALS = 6
 
@@ -221,33 +223,11 @@ def ivf_topk(
     corpus."""
     assigned = ivf_assign(vectors.select(id_col, vec_col), cents, vec_col)
     probes = ivf_probes(queries, cents, nprobe, qid_col, vec_col)
-    dot = (
-        f"aggregate(zip_with(qv, {vec_col}, (x, y) -> cast(x as double) * "
-        f"cast(y as double)), cast(0 as double), (acc, v) -> acc + v)"
+    pairs = assigned.join(F.broadcast(probes), "list_id").filter(
+        F.col(qid_col) != F.col(id_col)
     )
-    nq = (
-        "sqrt(aggregate(transform(qv, x -> cast(x as double) * cast(x as double)), "
-        "cast(0 as double), (acc, v) -> acc + v))"
-    )
-    nd = (
-        f"sqrt(aggregate(transform({vec_col}, x -> cast(x as double) * "
-        f"cast(x as double)), cast(0 as double), (acc, v) -> acc + v))"
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "list_id")
-        .filter(F.col(qid_col) != F.col(id_col))
-        .select(
-            qid_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(f"({dot}) / (({nq}) * ({nd}))").alias("cos"),
-        )
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", "neighbor_id")
-    )
+    scored = cosine_scores(pairs, qid_col, id_col, vec_col)
+    return cosine_topk(scored, qid_col, id_col, k).drop("cos")
 
 
 # ------------------------------------------------------------------ oracle

@@ -29,6 +29,7 @@ from ..config import CrossPolytopeConfig, MinHashConfig, SimHashConfig
 from ..functions.hashing import minhash_params
 from ..oracle.lsh_core import concat_hashes, cp_hash
 from ..params import fold_rotations, fold_rotations_2d, rotations_2d
+from .text import shingle_expr_sql
 
 
 def cp_signature_table(
@@ -146,24 +147,15 @@ def cp_multiprobe_signature_table(
 
 
 def shingle_expr(text_col: str, k: int):
-    """Word k-shingle array expression (JVM).  Documents with <= k tokens
-    yield one whole-text shingle (matches oracle/minhash.shingles)."""
-    toks = f"split({text_col}, ' ')"
-    return F.expr(
-        f"""
-        case when size({toks}) <= {k} then array({text_col})
-        else array_distinct(transform(
-            sequence(0, size({toks}) - {k}),
-            i -> concat_ws(' ', slice({toks}, i + 1, {k}))))
-        end
-        """
-    )
+    """``text.shingle_expr_sql`` as a JVM column expression."""
+    return F.expr(shingle_expr_sql(text_col, k))
 
 
 def _widen_narrow_scan(df: DataFrame) -> DataFrame:
-    """Round-robin a narrow scan across the cluster so the Arrow signature
-    stage parallelizes; a no-op at real scale where inputs have plenty of
-    splits (same pattern as pipeline.dedup_pipeline)."""
+    """Round-robin a narrow scan across the cluster so the Arrow map stage
+    after it (signatures here, the dedup chain's profile, near_dup_pairs'
+    signs) parallelizes; a no-op at real scale where inputs have plenty
+    of splits."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

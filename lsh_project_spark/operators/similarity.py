@@ -1,16 +1,26 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``brute_force_topk``: exact cosine top-k — the reference's ground-truth
-  linear scan (/root/reference/src/main.cc:91-113) as a DataFrame plan
-  (crossJoin + window); the correctness baseline for ANN.
-- ``hyperplane_signatures``: sign-LSH over embeddings using the engine's
-  structured-rotation machinery — the rotated vector's coordinate signs
-  give num_planes bits per table (same folded Hadamard rotations as the
-  CP path, /root/reference/src/lsh.c:110-176), batched numpy per Arrow
-  record batch.
-- ``ann_topk_lsh``: bucket-join ANN — candidates from shared sign-bucket
-  across L tables, exact cosine re-rank, top-k.  The scale path: candidate
-  generation is an equi-join, never a cross join.
+Every search is a candidate source, an exact cosine check of each
+candidate (reference src/lsh.c:851-877) and the best k kept
+(src/main.cc:369-408).  The check and the top-k are written once:
+``exact_cosine`` is the numpy kernel (sequential float64 folds,
+bit-identical to the SQL folds and to DuckDB's ``list_dot_product`` over
+DOUBLE[]; NaN, which Spark stores as null, for a zero norm),
+``cosine_scores`` the one Spark stage that runs it, and ``cosine_topk``
+the one rank window (cos desc with nulls last, then id).  The candidate
+sources:
+
+- ``brute_force_topk``: every vector — the reference's ground-truth scan
+  (src/main.cc:91-113), the baseline the approximate paths are checked
+  against.
+- ``ann_topk_lsh``: shared buckets of ``hyperplane_signatures`` (signs of
+  the CP path's folded Hadamard rotations, src/lsh.c:110-176), with
+  query multi-probe.
+- ``ann_topk_portable``: shared buckets of ``portable_signatures``
+  (``rademacher_planes``, ``auto_bits``), which a DuckDB twin reproduces.
+- ``near_dup_pairs``: ``candidates.candidate_pairs`` over the portable
+  buckets, kept at cosine >= threshold.
+- ``ivf.ivf_topk``: the members of each query's probed inverted lists.
 """
 
 from __future__ import annotations
@@ -26,41 +36,84 @@ from ..config import CrossPolytopeConfig
 from ..params import fold_rotations
 
 
+def _fold(x: np.ndarray) -> np.ndarray:
+    # row sums as SQL's left-to-right fold from 0.0: the leading 0.0 +
+    # only turns np.add.accumulate's all-(-0.0) sum into the fold's +0.0
+    return 0.0 + np.add.accumulate(x, axis=1)[:, -1]
+
+
+def exact_cosine(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Cosine of each row of ``a`` with the same row of ``b`` ([n, d]
+    each): ``dot / (sqrt(aa) * sqrt(bb))`` in float64.  A float32 widened
+    to float64 multiplies exactly as ``cast(x as double)`` does and every
+    sum is a sequential fold, so each value is bit-identical to the SQL
+    folds and DuckDB's ``list_dot_product`` over DOUBLE[].  A zero norm
+    gives NaN (0/0) rather than an error."""
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _fold(a * b) / (np.sqrt(_fold(a * a)) * np.sqrt(_fold(b * b)))
+
+
+def cosine_scores(
+    pairs: DataFrame, qid_col: str, id_col: str, vec_col: str,
+    queries: DataFrame | None = None, vectors: DataFrame | None = None,
+) -> DataFrame:
+    """(qid, id, cos) for every row of ``pairs``, in one numpy map stage
+    through ``exact_cosine``.  ``pairs`` either carries both vectors
+    already (the query's as ``qv``, the candidate's as ``vec_col``) or is
+    a bare (qid, id) list that gets ``queries``' and ``vectors``' vectors
+    joined on by key.  NaN cosines (zero norms) reach Spark as null."""
+    if queries is not None:
+        pairs = pairs.join(
+            queries.select(qid_col, F.col(vec_col).alias("qv")), qid_col
+        ).join(vectors.select(id_col, vec_col), id_col)
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = pdf[[qid_col, id_col]].copy()
+            out["cos"] = exact_cosine(
+                np.vstack(pdf["qv"].to_numpy()),
+                np.vstack(pdf[vec_col].to_numpy()),
+            )
+            yield out
+
+    types = dict(pairs.dtypes)
+    return pairs.select(qid_col, id_col, "qv", vec_col).mapInPandas(
+        score,
+        schema=f"{qid_col} {types[qid_col]}, {id_col} {types[id_col]}, cos double",
+    )
+
+
+def cosine_topk(scored: DataFrame, qid_col: str, id_col: str, k: int) -> DataFrame:
+    """(qid, rank, neighbor_id, cos): each query's k best candidates by
+    cos desc, ties to the lower id.  Null cosines sort last, so a zero
+    vector never ranks ahead of a defined neighbor (DuckDB's NULL order)."""
+    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(qid_col, "rank", F.col(id_col).alias("neighbor_id"), "cos")
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame, queries: DataFrame, k: int = 5,
     id_col: str = "vec_id", vec_col: str = "embedding",
     qid_col: str = "query_id",
 ) -> DataFrame:
     """Exact cosine top-k of each query against all vectors (excluding
-    self-matches by id)."""
-    dot = (
-        f"aggregate(zip_with(qv, {vec_col}, (x, y) -> cast(x as double) * "
-        f"cast(y as double)), cast(0 as double), (acc, v) -> acc + v)"
-    )
-    nq = (
-        "sqrt(aggregate(transform(qv, x -> cast(x as double) * cast(x as double)), "
-        "cast(0 as double), (acc, v) -> acc + v))"
-    )
-    nd = (
-        f"sqrt(aggregate(transform({vec_col}, x -> cast(x as double) * "
-        f"cast(x as double)), cast(0 as double), (acc, v) -> acc + v))"
-    )
-    q = queries.select(F.col(qid_col), F.col(vec_col).alias("qv"))
-    scored = (
-        q.crossJoin(vectors.select(id_col, vec_col))
+    self-matches by id); ``cos`` rounded to 6 decimals, null for a zero
+    norm."""
+    pairs = (
+        queries.select(qid_col, F.col(vec_col).alias("qv"))
+        .crossJoin(vectors.select(id_col, vec_col))
         .filter(F.col(id_col) != F.col(qid_col))
-        .select(
-            qid_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(f"({dot}) / (({nq}) * ({nd}))").alias("cos"),
-        )
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", "neighbor_id", F.expr("round(cos, 6)").alias("cos"))
-    )
+    scored = cosine_scores(pairs, qid_col, id_col, vec_col)
+    return cosine_topk(scored, qid_col, id_col, k).withColumn("cos", F.round("cos", 6))
 
 
 def hyperplane_signatures(
@@ -207,6 +260,23 @@ def portable_signatures(
     )
 
 
+def _bucket_topk(
+    vsig: DataFrame, qsig: DataFrame, vectors: DataFrame, queries: DataFrame,
+    k: int, id_col: str, vec_col: str, qid_col: str,
+) -> DataFrame:
+    """Sign-LSH top-k: every vector sharing a (table_idx, bucket) with the
+    query is a candidate (an equi-join, never a cross join; self-matches
+    and repeats across tables dropped), then the shared exact re-rank."""
+    cands = (
+        qsig.join(vsig, ["table_idx", "bucket"])
+        .filter(F.col(qid_col) != F.col(id_col))
+        .select(qid_col, id_col)
+        .dropDuplicates([qid_col, id_col])
+    )
+    scored = cosine_scores(cands, qid_col, id_col, vec_col, queries, vectors)
+    return cosine_topk(scored, qid_col, id_col, k)
+
+
 def ann_topk_portable(
     vectors: DataFrame, queries: DataFrame, k: int = 5, num_tables: int = 8,
     bits: int | None = None, id_col: str = "vec_id", vec_col: str = "embedding",
@@ -225,39 +295,8 @@ def ann_topk_portable(
         queries.withColumnRenamed(qid_col, id_col), planes, bits, id_col,
         vec_col, dim,
     ).withColumnRenamed(id_col, qid_col)
-    cands = (
-        qsig.join(vsig, ["table_idx", "bucket"])
-        .filter(F.col(qid_col) != F.col(id_col))
-        .select(qid_col, id_col)
-        .dropDuplicates([qid_col, id_col])
-    )
-    dot = (
-        f"aggregate(zip_with(qv, {vec_col}, (x, y) -> cast(x as double) * "
-        f"cast(y as double)), cast(0 as double), (acc, v) -> acc + v)"
-    )
-    nq = (
-        "sqrt(aggregate(transform(qv, x -> cast(x as double) * cast(x as double)), "
-        "cast(0 as double), (acc, v) -> acc + v))"
-    )
-    nd = (
-        f"sqrt(aggregate(transform({vec_col}, x -> cast(x as double) * "
-        f"cast(x as double)), cast(0 as double), (acc, v) -> acc + v))"
-    )
-    scored = (
-        cands.join(queries.select(qid_col, F.col(vec_col).alias("qv")), qid_col)
-        .join(vectors.select(id_col, vec_col), id_col)
-        .select(
-            qid_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(f"({dot}) / (({nq}) * ({nd}))").alias("cos"),
-        )
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", "neighbor_id")
-    )
+    top = _bucket_topk(vsig, qsig, vectors, queries, k, id_col, vec_col, qid_col)
+    return top.drop("cos")
 
 
 def ann_topk_lsh(
@@ -281,41 +320,8 @@ def ann_topk_lsh(
         queries.withColumnRenamed(qid_col, id_col), dim, num_tables, bits,
         id_col=id_col, vec_col=vec_col, probes=probes,
     ).withColumnRenamed(id_col, qid_col)
-    cands = (
-        qsig.join(vsig, ["table_idx", "bucket"])
-        .filter(F.col(qid_col) != F.col(id_col))
-        .select(qid_col, id_col)
-        .dropDuplicates([qid_col, id_col])
-    )
-    q = queries.select(qid_col, F.col(vec_col).alias("qv"))
-    joined = cands.join(q, qid_col).join(
-        vectors.select(id_col, vec_col), id_col
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.vstack(pdf["qv"].to_numpy()).astype(np.float64)
-            b = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            num = np.einsum("bd,bd->b", a, b)
-            den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-            out = pdf[[qid_col, id_col]].copy()
-            out["cos"] = np.where(den > 0, num / np.maximum(den, 1e-30), 0.0)
-            yield out
-
-    qid_type = dict(queries.dtypes)[qid_col]
-    id_type = dict(vectors.dtypes)[id_col]
-    scored = joined.mapInPandas(
-        score, schema=f"{qid_col} {qid_type}, {id_col} {id_type}, cos double"
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", F.col(id_col).alias("neighbor_id"),
-                F.expr("round(cos, 6)").alias("cos"))
-    )
+    top = _bucket_topk(vsig, qsig, vectors, queries, k, id_col, vec_col, qid_col)
+    return top.withColumn("cos", F.round("cos", 6))
 
 
 def near_dup_pairs(
@@ -350,17 +356,13 @@ def near_dup_pairs(
     so gated corpora sit orders of magnitude below the threshold; pass
     ``drop_stats`` and check ``hot_buckets == 0`` to assert it."""
     from .candidates import candidate_pairs
+    from .signatures import _widen_narrow_scan
 
     if bits is None:
         bits = auto_bits(n if n is not None else vectors.count())
     planes = rademacher_planes(ANN_SEED, num_tables, ANN_MAX_BITS, dim)
-    # the unrolled sign stage parallelizes over input partitions; widen a
-    # narrow scan (e.g. a single parquet file) to the cluster — a no-op at
-    # real scale where the table has plenty of splits
-    spark = vectors.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if vectors.rdd.getNumPartitions() < target:
-        vectors = vectors.repartition(target)
+    # the numpy sign stage parallelizes over input partitions
+    vectors = _widen_narrow_scan(vectors)
     # 8-byte keys through the hot path (same discipline as the image
     # pipeline, pipeline.py): signatures, the salted candidate
     # aggregation, and the exact-cosine verify joins all move
@@ -387,32 +389,14 @@ def near_dup_pairs(
         drop_stats=drop_stats,
     ).select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
 
-    # exact-cosine verify in one numpy map stage — same bit-identical
-    # doubles as the SQL folds it replaced (sequential np.add.accumulate
-    # dot and sum-of-squares, sqrt, the same norm-product-then-divide
-    # order), so the accept SET under `>= threshold` is unchanged
-    def _accept(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.vstack(pdf["va"].to_numpy()).astype(np.float64)
-            b = np.vstack(pdf["vb"].to_numpy()).astype(np.float64)
-            dots = np.add.accumulate(a * b, axis=1)[:, -1]
-            na = np.sqrt(np.add.accumulate(a * a, axis=1)[:, -1])
-            nb = np.sqrt(np.add.accumulate(b * b, axis=1)[:, -1])
-            keep = dots / (na * nb) >= threshold
-            yield pdf[["id_a", "id_b"]][keep]
-
-    joined = cands.join(
-        slim.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")),
-        "id_a",
-    ).join(
-        slim.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")),
-        "id_b",
-    )
-    id_type = dict(slim.dtypes)[id_col]
-    accepted = joined.mapInPandas(
-        _accept, schema=f"id_a {id_type}, id_b {id_type}"
+    accepted = (
+        cosine_scores(
+            cands, "id_a", "id_b", vec_col,
+            slim.withColumnRenamed(id_col, "id_a"),
+            slim.withColumnRenamed(id_col, "id_b"),
+        )
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b")
     )
     if not hash_ids:
         return accepted.select(

@@ -109,6 +109,8 @@ def doc_fingerprint(
 
 
 def shingle_expr_sql(text_col: str, k: int) -> str:
+    """Word k-shingle array expression (Spark SQL).  Documents with <= k
+    tokens yield one whole-text shingle (matches oracle/minhash.shingles)."""
     toks = f"split({text_col}, ' ')"
     return (
         f"case when size({toks}) <= {k} then array({text_col}) "

@@ -42,6 +42,7 @@ from .operators.candidates import candidate_pairs
 from .operators.cluster import assign_clusters
 from .operators.featurize import features_from_phash
 from .operators.signatures import (
+    _widen_narrow_scan,
     cp_signature_table,
     minhash_band_table,
     simhash_band_table,
@@ -159,15 +160,9 @@ def _dedup_chain(
         verify_pairs_from_profile,
     )
 
-    slim = images.select("image_id", "caption", "phash")
     # the Arrow profile stage parallelizes over INPUT partitions; a compact
-    # parquet (few row groups) would starve the Python workers.  Only
-    # repartition when the scan is narrower than the cluster — at real
-    # scale inputs have plenty of splits and this is a no-op.
-    spark = images.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if slim.rdd.getNumPartitions() < target:
-        slim = slim.repartition(target)
+    # parquet (few row groups) would starve the Python workers
+    slim = _widen_narrow_scan(images.select("image_id", "caption", "phash"))
     # Narrow the hot path to 8-byte keys: every shuffle up to the map-back
     # (both collect_list levels, pair dedup, the verify self-joins, every
     # CC round) moves xxhash64(image_id) longs instead of id strings — the
@@ -199,7 +194,7 @@ def _dedup_chain(
             from .operators.substring import substring_pairs
 
             sub_future = pool.submit(
-                inheritable_thread_target(spark)(stage),
+                inheritable_thread_target(images.sparkSession)(stage),
                 "substring_pairs",
                 [],
                 lambda: substring_pairs(

@@ -172,59 +172,13 @@ def q_shingle_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for query vectors (vec_id % 50 = 0)
     — the reference's exact ground-truth scan (src/main.cc:91-113) as the
-    ANN baseline.  Rank ties broken by neighbor id.  Norms are hoisted into
-    pre-projected columns BEFORE the cross join (computed n+q times, not
-    n*q times); the per-pair dot/divide runs in one numpy map stage whose
-    doubles are bit-identical to the SQL fold it replaced (sequential
-    np.add.accumulate == the left-to-right aggregate; the zip_with
-    previously allocated a 64-element array per pair, interpreted)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
+    ANN baseline: ``similarity.brute_force_topk``.  Rank ties broken by
+    neighbor id."""
+    from ..operators.similarity import brute_force_topk
 
     e = _emb(spark, sf_dir)
-    norm_of = (
-        "sqrt(aggregate(transform({v}, x -> cast(x as double) * cast(x as double)), "
-        "cast(0 as double), (acc, v) -> acc + v))"
-    )
-    q = e.filter(F.expr("vec_id % 50 = 0")).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.expr(norm_of.format(v="embedding")).alias("nq"),
-    )
-    ed = e.select(
-        "vec_id", "embedding", F.expr(norm_of.format(v="embedding")).alias("nd")
-    )
-    joined = q.crossJoin(ed).filter(F.col("vec_id") != F.col("query_id"))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.vstack(pdf["qv"].to_numpy()).astype(np.float64)
-            b = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            dots = np.add.accumulate(a * b, axis=1)[:, -1]
-            out = pdf[["query_id"]].copy()
-            out["neighbor_id"] = pdf["vec_id"].to_numpy()
-            out["cos"] = dots / (
-                pdf["nq"].to_numpy() * pdf["nd"].to_numpy()
-            )
-            yield out
-
-    scored = joined.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    q = e.filter(F.expr("vec_id % 50 = 0")).withColumnRenamed("vec_id", "query_id")
+    return brute_force_topk(e, q, k=5).select("query_id", "rank", "neighbor_id")
 
 
 def q_tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,8 +357,9 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook fit with deterministic Lloyd iterations on the hash-selected
     bounded sample (at sf0.01 the stride is 1, so the fit is over the full
     id-sorted table — bit-identical to the oracle's pyarrow-side fit),
-    nearest-list assignment as one JVM fold (a projection, no shuffle),
-    probes broadcast into a list_id equi-join, exact cosine re-rank."""
+    nearest-list assignment as one numpy map stage (a projection, no
+    shuffle), probes broadcast into a list_id equi-join, exact cosine
+    re-rank."""
     from ..operators.ivf import ivf_fit_centroids, ivf_topk
 
     e = _emb(spark, sf_dir)

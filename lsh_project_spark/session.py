@@ -11,6 +11,7 @@ of the zips on the worker's path.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -46,6 +47,16 @@ def _launcher_conf() -> dict:
     return dict(SparkConf().getAll())
 
 
+def _local_cores(master: str) -> int | None:
+    """Worker threads of a ``local``, ``local[N]`` or ``local[*]`` master
+    (``[N, F]`` retry forms too); None for any other master."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\s*\d+)?\])?", master.strip())
+    if not m:
+        return None
+    n = m.group(1) or "1"
+    return (os.cpu_count() or 1) if n == "*" else int(n)
+
+
 def get_spark(
     app: str = "lsh_project_spark",
     cores: int | None = None,
@@ -54,8 +65,16 @@ def get_spark(
 ) -> SparkSession:
     """The engine's session.  Its settings (and ``extra``) only fill the
     keys a launcher such as spark-submit did not set: ``spark-submit
-    --master yarn --conf spark.sql.shuffle.partitions=N`` keeps both."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    --master yarn --conf spark.sql.shuffle.partitions=N`` keeps both.
+    Shuffle partitions, default parallelism and the AQE partition floor
+    scale with the cores of the master in effect: a launcher's local
+    master, else ``cores``, else ``SPARK_GRAFT_CPUS`` (default 32)."""
+    launcher = _launcher_conf()
+    cores = (
+        _local_cores(launcher.get("spark.master", ""))
+        or cores
+        or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    )
     shuffle_partitions = shuffle_partitions or max(8, cores * 8)
     # One BLAS thread per Python worker: task-level parallelism already
     # saturates the cores, and N workers x N-thread BLAS oversubscribes
@@ -125,7 +144,6 @@ def get_spark(
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         **(extra or {}),
     }
-    launcher = _launcher_conf()
     conf = {k: v for k, v in conf.items() if k not in launcher}
     if launcher.get("spark.master", conf.get("spark.master", "")).startswith("local"):
         # Python workers fork from worker_daemon, which stops each task's

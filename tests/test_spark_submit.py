@@ -75,43 +75,69 @@ def test_spark_submit_pyfiles_end_to_end(spark, packaged, tmp_path):
     assert m["rows"] == len(want)
 
 
-def test_spark_submit_settings_win_over_get_spark(tmp_path):
-    """`spark-submit --master/--conf` values reach the session: get_spark
-    fills only the keys the launcher left unset, and the Python-worker
-    daemon follows the master in effect (local here)."""
+def _submit_probe(tmp_path, submit_args, env, fields):
+    """Run `spark-submit <submit_args> probe.py`, where probe.py calls
+    get_spark(), runs one Python task and prints ``fields`` (name ->
+    Python expression over ``spark`` and ``sc``) as JSON; return them."""
     script = tmp_path / "probe.py"
+    shown = "".join(f"    {k!r}: {v},\n" for k, v in fields.items())
     script.write_text(
         "import json\n"
         "from lsh_project_spark.session import get_spark\n"
         "spark = get_spark()\n"
         "sc = spark.sparkContext\n"
         "assert sc.range(8, numSlices=2).map(lambda x: x * 2).sum() == 56\n"
-        "print('PROBE ' + json.dumps({\n"
-        "    'master': sc.master,\n"
-        "    'shuffle': spark.conf.get('spark.sql.shuffle.partitions'),\n"
-        "    'aqe': spark.conf.get('spark.sql.adaptive.enabled'),\n"
-        "    'daemon': sc.getConf().get('spark.python.daemon.module'),\n"
-        "}))\n"
+        f"print('PROBE ' + json.dumps({{\n{shown}}}))\n"
         "spark.stop()\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_CPUS="3",
-               PYSPARK_PYTHON=sys.executable)
+    env = dict(env, PYTHONPATH=repo, PYSPARK_PYTHON=sys.executable)
     proc = subprocess.run(
-        [
-            "spark-submit",
-            "--master", "local[2]",
-            "--conf", "spark.sql.shuffle.partitions=7",
-            "--conf", "spark.ui.enabled=false",
-            str(script),
-        ],
+        ["spark-submit", *submit_args, "--conf", "spark.ui.enabled=false",
+         str(script)],
         capture_output=True, text=True, timeout=300, cwd=str(tmp_path), env=env,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = next(ln for ln in proc.stdout.splitlines() if ln.startswith("PROBE "))
-    assert json.loads(line[len("PROBE "):]) == {
+    return json.loads(line[len("PROBE "):])
+
+
+def test_spark_submit_settings_win_over_get_spark(tmp_path):
+    """`spark-submit --master/--conf` values reach the session: get_spark
+    fills only the keys the launcher left unset, and the Python-worker
+    daemon follows the master in effect (local here)."""
+    got = _submit_probe(
+        tmp_path,
+        ["--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=7"],
+        dict(os.environ, SPARK_GRAFT_CPUS="3"),
+        {
+            "master": "sc.master",
+            "shuffle": "spark.conf.get('spark.sql.shuffle.partitions')",
+            "aqe": "spark.conf.get('spark.sql.adaptive.enabled')",
+            "daemon": "sc.getConf().get('spark.python.daemon.module')",
+        },
+    )
+    assert got == {
         "master": "local[2]",
         "shuffle": "7",
         "aqe": "true",
         "daemon": "lsh_project_spark.worker_daemon",
     }
+
+
+def test_session_sized_from_the_launchers_local_master(tmp_path):
+    """Under `spark-submit --master local[2]` with SPARK_GRAFT_CPUS unset,
+    shuffle partitions, default parallelism and the AQE partition floor
+    follow the master's 2 cores, not the 32-core default."""
+    got = _submit_probe(
+        tmp_path,
+        ["--master", "local[2]"],
+        {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"},
+        {
+            "shuffle": "spark.conf.get('spark.sql.shuffle.partitions')",
+            "parallelism": "sc.defaultParallelism",
+            "floor": "spark.conf.get("
+            "'spark.sql.adaptive.coalescePartitions.minPartitionNum')",
+        },
+    )
+    assert got == {"shuffle": "16", "parallelism": 4, "floor": "4"}
