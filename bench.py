@@ -270,8 +270,8 @@ def run_ann_recall_bench(spark) -> dict:
 def run_reference_nn_bench(spark) -> dict:
     """The reference's own workload (n=65,536 unit vectors, d=128, k=2,
     L=8, /root/reference/src/main.cc:203-238), queries scaled 8x (8,192
-    noisy copies) to amortize job overhead: build the signature table and
-    answer every query by probe + exact verify + argmax.  Reports wall sec
+    noisy copies) to amortize job overhead: index the queries, then answer
+    every one by probe + exact verify + argmax in one pass over the data.  Reports wall sec
     and queries/sec for comparison against BASELINE.md's analytic model."""
     from lsh_project_spark.config import CrossPolytopeConfig
     from lsh_project_spark.operators.knn import (
@@ -286,8 +286,9 @@ def run_reference_nn_bench(spark) -> dict:
     data.count()
     queries = noisy_queries(spark, data, q, d, n).persist()
     queries.count()
-    # join path (scales to any index size): warmup on a slice, then
-    # min-of-N timed full runs (single runs swing with co-tenant load)
+    # one-pass path (the data side streams at any size, the queries are
+    # the broadcast index): warmup on a slice, then min-of-N timed full
+    # runs (single runs swing with co-tenant load)
     cp_nearest_neighbor(data, queries.limit(256), cfg).write.mode(
         "overwrite"
     ).format("noop").save()

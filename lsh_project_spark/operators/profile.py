@@ -5,8 +5,9 @@ all rotation/hash work while operands stay cache-resident,
 /root/reference/src/main.cc:513-549, src/lsh.c:466-536) maps to a single
 ``mapInPandas`` stage that computes, per Arrow record batch:
 
-  - CP-LSH buckets over the phash-derived unit vector (batched matmul +
-    vectorized argmax; semantics of src/lsh.c:203-220,328-342),
+  - CP-LSH buckets over the phash-derived unit vector (oracle/lsh_core.
+    cp_bucket_keys: a matmul per 512-row block + vectorized argmax/argmin;
+    semantics of src/lsh.c:203-220,328-342),
   - MinHash band hashes over caption shingles (Broder '97),
   - SimHash fingerprint over caption tokens (Charikar '02),
   - the shingle-hash set itself (reused by the exact-Jaccard verify, so
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame
 
 from ..config import PipelineConfig
 from ..functions.hashing import minhash_params
-from ..oracle.lsh_core import concat_hashes, cp_hash
+from ..oracle.lsh_core import cp_bucket_keys
 from ..params import fold_rotations_2d
 from ..sources.codecs import phash_to_vector
 from .signatures import SIMHASH_SALT, simhash_band_expr
@@ -103,7 +104,7 @@ def multimodal_profile(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
     a, b, c = minhash_params(mh_cfg.num_perm, mh_cfg.seed)
     rpb, n_bands = mh_cfg.rows_per_band, mh_cfg.num_bands
     rot2d = fold_rotations_2d(cfg.cp)
-    L, k, d = cfg.cp.num_tables, cfg.cp.k, cfg.cp.dim
+    L, k = cfg.cp.num_tables, cfg.cp.k
     shingle_k = mh_cfg.shingle_size
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -111,10 +112,9 @@ def multimodal_profile(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
             if not len(pdf):
                 continue
             n = len(pdf)
-            # --- CP-LSH: one BLAS call for the whole batch
+            # --- CP-LSH: one BLAS call per 512-row block
             x = phash_to_vector(pdf["phash"].to_numpy())
-            y = (x @ rot2d).reshape(n, L, k, d)
-            cp_buckets = concat_hashes(cp_hash(y), d)  # [n, L]
+            cp_buckets = cp_bucket_keys(x, rot2d, L, k)  # [n, L]
             # --- captions, in sub-blocks so the [shingles, num_perm]
             # minhash matrix stays ~100 MB
             hs_list, mh_list, sim_list, sim2_list = [], [], [], []

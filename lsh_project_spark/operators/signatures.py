@@ -1,11 +1,17 @@
 """Signature operators: CP-LSH buckets, MinHash bands, SimHash bands.
 
 CP-LSH (the reference's core, /root/reference/src/lsh.c:328-342 +
-src/main.cc:294-323) runs as ONE batched numpy matmul per Arrow record
-batch — the Spark-native form of the reference's "bulked" kernels
-(src/lsh.c:466-536, bulk=512): `batch[B,d] @ RotMat2d[d, L*k*d]` computes
-every table's every hash at once, then a vectorized argmax + bit-concat.
-The folded rotation tensor is broadcast via closure capture (~1 MiB).
+src/main.cc:294-323) runs the one shared kernel
+``oracle/lsh_core.cp_bucket_keys`` per Arrow record batch — the
+Spark-native form of the reference's "bulked" kernels
+(src/lsh.c:466-536, bulk=512): each 512-row block's
+`block[512,d] @ RotMat2d[d, L*k*d]` computes every table's every hash at
+once, then a vectorized argmax/argmin + bit-concat; the block keeps the
+float32 product in cache.  The folded rotation tensor is broadcast via
+closure capture (~1 MiB).  The exploded (id, table_idx, bucket) tables
+feed bucket equi-joins (``pipeline.all_signatures``, the multi-probe
+gate); ``knn.cp_nearest_neighbor`` calls the same kernels inside its one
+data pass and never explodes a table.
 
 MinHash and SimHash (no reference analog; SURVEY.md §2.9) each run as ONE
 Arrow-vectorized map stage over the shared numpy kernels in
@@ -27,7 +33,7 @@ from pyspark.sql import DataFrame
 
 from ..config import CrossPolytopeConfig, MinHashConfig, SimHashConfig
 from ..functions.hashing import minhash_params
-from ..oracle.lsh_core import concat_hashes, cp_hash
+from ..oracle.lsh_core import cp_bucket_keys, cp_multiprobe_keys
 from ..params import fold_rotations, fold_rotations_2d, rotations_2d
 from .text import shingle_expr_sql
 
@@ -41,30 +47,34 @@ def cp_signature_table(
     (/root/reference/src/lsh.c:44,70-77): insertion = materialization,
     probe = equi-join on (table_idx, bucket).
     """
-    # one [d, L*k*d] operand (float32, tiny -> closure capture) so each
-    # Arrow batch is a single BLAS call
+    # one [d, L*k*d] operand (float32, tiny -> closure capture)
     rot2d = fold_rotations_2d(cfg)
-    L, k, d = cfg.num_tables, cfg.k, cfg.dim
+    L, k = cfg.num_tables, cfg.k
 
     def sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.vstack(pdf["features"].to_numpy()).astype(np.float32)
-            y = (x @ rot2d).reshape(len(pdf), L, k, d)
-            buckets = concat_hashes(cp_hash(y), d)  # [B, L] int64
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), L),
-                    "table_idx": np.tile(np.arange(L, dtype=np.int32), n),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
+            x = np.vstack(pdf["features"].to_numpy())
+            buckets = cp_bucket_keys(x, rot2d, L, k)  # [B, L] int64
+            yield _exploded(pdf[id_col].to_numpy(), buckets[None], id_col)
 
     id_type = dict(features.dtypes)[id_col]
     schema = f"{id_col} {id_type}, table_idx int, bucket long"
     return features.mapInPandas(sign, schema=schema)
+
+
+def _exploded(ids: np.ndarray, keys: np.ndarray, id_col: str) -> pd.DataFrame:
+    """(id, table_idx, bucket) rows of keys [P, n, L], probe-major: every
+    row's P probes of every table."""
+    n_probes, n, L = keys.shape
+    return pd.DataFrame(
+        {
+            id_col: np.tile(np.repeat(ids, L), n_probes),
+            "table_idx": np.tile(np.arange(L, dtype=np.int32), n_probes * n),
+            "bucket": keys.reshape(-1),
+        }
+    )
 
 
 def cp_multiprobe_signature_table(
@@ -73,9 +83,9 @@ def cp_multiprobe_signature_table(
 ) -> DataFrame:
     """Query-side multi-probe CP-LSH: (id, features) -> (id, table_idx,
     bucket) with up to ``probes`` buckets per (row, table) — the base bucket
-    plus the cheapest single sub-hash swaps, ranked by margin
-    |y|_best - |y|_second (Lv et al. '07 multi-probe LSH; the analog of
-    FALCONN's probing sequence, /root/reference/falconn/random_benchmark.cc:298).
+    plus the cheapest single sub-hash swaps (oracle/lsh_core.
+    cp_multiprobe_keys, which ``knn.cp_nearest_neighbor`` calls on its
+    query side too).
 
     Probing multiplies per-table recall without growing the signature table:
     at equal recall an index needs fewer tables, i.e. fewer shuffled rows —
@@ -88,54 +98,16 @@ def cp_multiprobe_signature_table(
     """
     if rot is None:
         rot = fold_rotations(cfg)
-    L, k, d, _ = rot.shape
+    L, k, _, _ = rot.shape
     rot2d = rotations_2d(rot)
-    cldim = (d - 1).bit_length() + 1  # bits per sub-hash (concat_hashes)
 
     def sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            n = len(pdf)
-            x = np.vstack(pdf["features"].to_numpy()).astype(np.float32)
-            y = (x @ rot2d).reshape(n, L, k, d)
-            take = np.take_along_axis
-            # base sub-hashes via the EXACT data-side function (tie rules
-            # included) so probe 0 always hits the indexed bucket
-            h1 = cp_hash(y)  # [n, L, k], h = axis + d*(sign<0)
-            ax = (h1 % d).astype(np.int64)
-            abs_chosen = np.abs(take(y, ax[..., None], 3)[..., 0])
-            ay = np.abs(y)
-            np.put_along_axis(ay, ax[..., None], -1.0, axis=3)
-            second_ax = np.argmax(ay, axis=3)
-            second_val = take(y, second_ax[..., None], 3)[..., 0]
-            h2 = second_ax + d * (second_val < 0)
-            margin = abs_chosen - np.abs(second_val)  # [n, L, k] >= 0
-            base = concat_hashes(h1, d)  # [n, L]
-            ids, tids, buckets = [], [], []
-            idv = pdf[id_col].to_numpy()
-            # probe p swaps exactly one sub-hash j to h2; cheapest first
-            swap_rank = np.argsort(margin, axis=2)  # [n, L, k]
-            shift = cldim * (k - 1 - np.arange(k))  # bit offset of sub-hash j
-            for p in range(min(probes, k + 1)):
-                if p == 0:
-                    b = base
-                else:
-                    j = swap_rank[:, :, p - 1]  # [n, L]
-                    sh = shift[j]
-                    old = take(h1, j[..., None], 2)[..., 0]
-                    new = take(h2, j[..., None], 2)[..., 0]
-                    b = base - (old << sh) + (new << sh)
-                ids.append(np.repeat(idv, L))
-                tids.append(np.tile(np.arange(L, dtype=np.int32), n))
-                buckets.append(b.reshape(-1))
-            yield pd.DataFrame(
-                {
-                    id_col: np.concatenate(ids),
-                    "table_idx": np.concatenate(tids),
-                    "bucket": np.concatenate(buckets),
-                }
-            )
+            x = np.vstack(pdf["features"].to_numpy())
+            keys = cp_multiprobe_keys(x, rot2d, L, k, probes)  # [P, n, L]
+            yield _exploded(pdf[id_col].to_numpy(), keys, id_col)
 
     id_type = dict(features.dtypes)[id_col]
     return features.mapInPandas(
